@@ -23,7 +23,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -42,10 +41,6 @@ TABLES: tuple[str, ...] = (
 _EVENTS_RAW_SCHEMA = (
     "event_id long, ts long, user_id long, event_type string, value double, props string"
 )
-
-
-def sf_dir_from_env() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
 
 
 # Lazy-scan DataFrames are immutable plans, so re-creating one per call only
@@ -113,20 +108,3 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
         # integer `div`, not `/1000` — ns-since-epoch exceeds double's 2^53
         F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
     )
-
-
-def register_sources(
-    spark: SparkSession, sf_dir: str | None = None, tables: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    """Register every source as a temp view (name == table name).
-
-    Temp views are logical plans: Catalyst inlines them, so downstream models
-    still get pushdown/pruning against the parquet scans.
-    """
-    sf_dir = sf_dir or sf_dir_from_env()
-    out: dict[str, DataFrame] = {}
-    for name in tables:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

@@ -2,19 +2,15 @@
 
 - exact dedup: hash-groupBy on a content fingerprint (md5).  At 100 TB the
   groupBy shuffles only (fingerprint, doc_id) — 48 bytes/row — never the text.
-- near-dup (MinHash + LSH): word-shingle sets -> HashingTF sparse vectors ->
-  MinHashLSH banded similarity join with a Jaccard-distance threshold.
-  Spark ML's approxSimilarityJoin is the banded-join formulation of
-  Broder's MinHash scheme: candidate pairs come from LSH bucket joins, then
-  exact MinHash-estimated distance filters them — no O(n^2) cross join.
 - SimHash: 64-bit fingerprint from token hashes; near-dups = pairs whose
   fingerprints match on at least one of 4 16-bit bands (Hamming<=3-ish
   recall), joined band-wise — again no cross join.
 - exact n-gram Jaccard / asymmetric containment: common-shingle joins
   (documents only meet if they share a shingle), shingle relation
   checkpointed once.
-- native banded MinHash: signature pipeline + exact-Jaccard verification of
-  candidates only (false-positive-free).
+- near-dup (banded MinHash): word-shingle signatures -> band self-join for
+  candidate pairs -> exact-Jaccard verification of candidates only
+  (false-positive-free, no O(n^2) cross join).
 - connected components over the pair graph -> dedup groups; canonical-doc
   selection per group; benchmark decontamination (broadcast shingle
   anti-join); cross-source overlap reporting.
@@ -69,69 +65,9 @@ def dedup_exact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     return docs.join(keep, on=id_col, how="left_semi")
 
 
-def minhash_near_duplicates(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_len: int = 3,
-    num_features: int = 1 << 18,
-    num_hash_tables: int = 8,
-    jaccard_threshold: float = 0.5,
-    seed: int = 42,
-) -> DataFrame:
-    """MinHash+LSH near-duplicate pairs (id_a < id_b, est. Jaccard distance).
-
-    Word-level ``shingle_len``-gram shingles -> binarized HashingTF ->
-    MinHashLSH.approxSimilarityJoin.  ``num_hash_tables`` trades recall for
-    shuffle volume; at 100 TB keep vectors (not text) in the join and bump
-    tables to ~16 for thresholds near 0.8.
-
-    NOTE: this Spark-ML formulation is the *cross-check twin*, not the
-    default path — :func:`neardup_minhash_native` (signatures -> banded
-    self-join -> exact verify) finds the same pairs at ~2.3x less wall time
-    (round-1 bench: 6.6 s vs 14.9 s at sf0.1) and is what the harness
-    registers as ``x_neardup_minhash``.
-    """
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    tokens = docs.select(
-        F.col(id_col),
-        F.split(F.col(text_col), r"\s+").alias("tokens"),
-    )
-    # word n-gram shingles via sliding window over the token array (pure
-    # Column expr — no Python UDF): shingle i = tokens[i..i+n-1] joined.
-    n = shingle_len
-    shingled = tokens.select(
-        id_col,
-        F.filter(
-            F.transform(
-                F.sequence(F.lit(0), F.greatest(F.size("tokens") - n, F.lit(0))),
-                lambda i: F.concat_ws(" ", F.slice("tokens", i + 1, n)),
-            ),
-            lambda s: s != "",
-        ).alias("shingles"),
-    ).filter(F.size("shingles") > 0)
-
-    tf = HashingTF(
-        inputCol="shingles", outputCol="features", numFeatures=num_features, binary=True
-    )
-    feats = tf.transform(shingled)
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=seed)
-    model = lsh.fit(feats)
-    pairs = model.approxSimilarityJoin(feats, feats, 1.0 - jaccard_threshold, distCol="jaccard_dist")
-    return (
-        pairs.select(
-            F.col(f"datasetA.{id_col}").alias("id_a"),
-            F.col(f"datasetB.{id_col}").alias("id_b"),
-            F.col("jaccard_dist"),
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-    )
-
-
 def _distinct_shingle_rel(docs: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     """(id, s): the DISTINCT word-level n-gram shingles of each document,
-    same sliding window as the MinHash path.
+    same sliding window as the MinHash signatures.
 
     The token array is bound in its OWN projection before the sliding-window
     lambda: higher-order functions are interpreted per element, so a

@@ -2625,8 +2625,12 @@ def knn_pagerank(
     edges = knn_graph_edges(
         embeddings, k, id_col, vec_col, candidates
     ).localCheckpoint(eager=True)
-    nodes = embeddings.select(F.col(id_col).alias("vec_id")).localCheckpoint(
-        eager=True
+    # DISTINCT ids, as the oracle's node set: a repeated id row must not
+    # multiply its rank mass or its output row
+    nodes = (
+        embeddings.select(F.col(id_col).alias("vec_id"))
+        .distinct()
+        .localCheckpoint(eager=True)
     )
     base = (100 - damping_pct) * 1_000_000 // 100
     # nodes with NO in-edge receive m = 0 every iteration, i.e. the
@@ -2734,8 +2738,10 @@ def knn_label_propagation(
         mutual.select(F.col("query_id").alias("v"), F.col("neighbor_id").alias("u"))
         .localCheckpoint(eager=True)
     )
-    nodes = embeddings.select(F.col(id_col).alias("vec_id")).localCheckpoint(
-        eager=True
+    nodes = (
+        embeddings.select(F.col(id_col).alias("vec_id"))
+        .distinct()
+        .localCheckpoint(eager=True)
     )
     # ISOLATED nodes (no mutual edge) never appear in adj — as v or u, the
     # relation is symmetric — so their label is their own id at every

@@ -19,9 +19,11 @@ value-hash oracle (deterministic md5-seeded hashing replayed in SQL).
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -2270,9 +2272,8 @@ QUERIES: dict[str, QuerySpec] = {
     ),
     # Default near-dup path = the native banded MinHash (signatures -> band
     # self-join -> exact Jaccard verify): same recall as the Spark-ML
-    # approxSimilarityJoin twin at ~2.3x less wall time (round-1 bench 6.6 s
-    # vs 14.9 s at sf0.1).  The ML variant stays in ext/dedup.py as a
-    # cross-check twin under pytest (tests/test_ext.py recall tests).
+    # approxSimilarityJoin formulation it replaced at ~2.3x less wall time
+    # (round-1 bench 6.6 s vs 14.9 s at sf0.1).
     # VALUE-HASH ORACLE (upgraded from rows-only per VERDICT r2 #5): with
     # r=1/b=16 banding a true pair at Jaccard J misses every band with
     # probability (1-J)^16; the corpus' near-dup pairs all sit at J >= 0.888
@@ -2557,725 +2558,62 @@ QUERIES: dict[str, QuerySpec] = {
     },
 }
 
-# Driver verification order. The round-1 driver recorded CORRECTNESS rows for
-# only the first 50 dict entries, which left the whole extension surface
-# (near-dup, vector search, multimodal, streaming) unverified. Keep the seven
-# reference models up front (cheap, and they are the headline), then everything
-# the round-1 run never reached, then the remaining already-verified queries.
-_ROUND1_UNSEEN = [
-    "x_source_overlap", "x_hash_sample", "x_chunk_documents", "x_pii_scrub",
-    "x_pq_encode", "x_semantic_search", "x_ivfpq_topk", "x_ivfpq_index_search",
-    "x_pq_topk",
-    "x_semdedup", "x_language_id", "x_language_profile", "x_fingerprint",
-    "x_knn_cosine_topk", "x_embedding_neardup", "x_ivf_assign",
-    "x_ngram_jaccard", "x_ngram_containment", "x_ngram_jaccard_filtered",
-    "x_pack_documents", "x_tfidf_top_terms", "x_dedup_components",
-    "x_decontaminate", "x_training_pipeline", "x_neardup_minhash",
-    "x_knn_lsh", "x_ivf_topk", "x_simhash_neardup",
-    "m_media_features", "m_patch_grid", "m_frame_sample", "m_resize_plan",
-    "s_stream_weekly_rollup", "s_stream_distinct_users",
-    "s_stream_purchase_attribution", "s_stream_dedup_events",
-]
-_REFERENCE_MODELS = [
+# Verification order. Each verification run oracle-checks only the first 50
+# entries, so the order picks what each verdict re-checks: the 7 reference
+# models, then queries whose code changed after their latest green verdict,
+# then the rest, oldest latest-green verdict first (stable, so ties keep
+# registration order). A query's latest green verdict is the newest committed
+# CORRECTNESS_r<N>.json that records it matching with no error; none is 0.
+_REFERENCE_MODELS = (
     "stg_top_terms", "stg_top_rising_terms", "stg_international_top_terms",
     "stg_international_top_rising_terms", "weekly_trends_summary",
     "top_terms_comparison", "trending_terms_analysis",
-]
-# The three queries that FAILED the round-1 driver hash on DuckDB HUGEINT
-# typing (fixed by CAST(... AS BIGINT) in their oracles) must re-enter the
-# 50-entry verification window so CORRECTNESS_r02 records them green.
-_FIXED_R01_FAILURES = [
-    "q_sessionize_events",
-    "q_json_props_stats",
-    "x_token_histogram",
-]
-# New round-2 queries slot in right after the round-1-unseen block so they
-# land inside the driver's 50-entry verification window.
-_ROUND2_NEW = [
-    "x_kmeans_refine",
-    "x_incremental_dedup",
-    "x_dup_span_coverage",
-    "q_session_windows",
-]
-# Later round-2 queries: positions 51+ (locally parity-checked; first in line
-# if the driver's verification window grows past 50).
-_ROUND2_LATE = [
-    "x_quality_classifier",
-    "x_filter_funnel",
-    "x_mixture_plan",
-    "x_source_caps",
-    "x_token_budget_select",
-    "x_stratified_exact_n",
-    "d_metrics_events",
-    "x_boilerplate_strip",
-    "x_sq8_encode",
-    "x_sq8_topk",
-    "x_l2_topk",
-    "x_ann_recall",
-    "x_bigram_logprob",
-    "x_temperature_mix",
-    "x_mmr_topk",
-    "x_neardup_minhash_checked",
-    "x_incremental_neardup",
-    "q_key_skew",
-    "s_stream_top_types",
-    "s_stream_sessionize",
-    "x_hashed_embedding",
-    "x_hashed_knn",
-    "x_countmin_heavy",
-    "m_audio_windows",
-    "q_shipping_priority",
-    "q_returned_revenue",
-    "q_large_volume_orders",
-    "q_forecast_revenue",
-    "q_nation_trade",
-    "q_market_share",
-    "q_nation_profit",
-    "x_corpus_report",
-    "x_simhash_checked",
-    "q_min_cost_supplier",
-    "q_important_parts",
-    "q_late_shipments",
-    "q_dominant_suppliers",
-    "q_blocking_suppliers",
-    "q_event_transitions",
-    "x_cdc_chunks",
-    "x_ppl_buckets",
-    "x_substring_contam",
-    "x_matryoshka_topk",
-    "x_ivfpq_residual",
-    "m_phash_neardup",
-    "s_stream_countmin",
-    "q_retention_cohorts",
-    "q_funnel",
-    "q_histogram_quantiles",
-    "q_linear_counting",
-    "q_weekly_anomalies",
-    "q_user_ewma",
-    "x_winnowing",
-    "x_bm25_search",
-    "x_hybrid_rrf",
-    "x_bm25_index_search",
-    "q_record_linkage",
-    "x_bitext_mining",
-    "x_search_snippets",
-    "s_stream_ewma",
-    "q_zorder_keys",
-    "q_profile_orders",
-    "m_patch_stats",
-    "x_pack_positions",
-    "q_bloom_prefilter",
-    "x_weighted_sample",
-    "q_hll_users",
-    "q_audience_overlap",
-    "s_stream_hll",
-    "x_langid_confusion",
-    "x_pmi_collocations",
-    "q_interpolate_daily",
-    "x_rag_pipeline",
-    "q_weekly_correlation",
-    "q_chisquare",
-    "q_bootstrap_ci",
-    "q_table_fingerprints",
-    "q_wilson_ranking",
-    "q_session_paths",
-    "q_conversion_lag",
-    "x_source_divergence",
-    "x_embedding_dim_stats",
-    "q_ks_test",
-    "q_benford",
-    "q_theilsen_trend",
-    "s_stream_drift",
-    "q_seasonality",
-    "q_ab_ztest",
-    "q_association_rules",
-    "q_decimal_revenue",
-    "q_mannwhitney",
-    "q_ols_trend",
-    "x_quality_auc",
-    "x_tokenizer_fertility",
-    "s_stream_sliding_rollup",
-    "x_knn_graph",
-    "x_knn_homophily",
-    "x_knn_pagerank",
-    "x_knn_clustering",
-    "x_retrieval_ndcg",
-    "q_gini",
-    "q_churn",
-    "q_ltv_cohorts",
-    "q_holt_forecast",
-    "x_zipf_slope",
-    "m_scene_changes",
-    "q_kaplan_meier",
-    "q_rfm_segments",
-    "q_markov_stationary",
-    "x_dedup_quality_canonical",
-    "x_ngram_novelty",
-    "x_binary_hamming",
-    "q_python_datasource",
-    "q_sql_udf_macros",
-    "x_text_tiling",
-    "q_spearman",
-    "x_adaptive_quality",
-    "x_knn_bfs",
-    "s_stream_pysource",
-    "q_window_funnel",
-    "q_sequence_match",
-    "x_minhash_audit",
-    "x_pca_power",
-    "x_curriculum_order",
-    "x_blocklist_filter",
-    "q_stickiness",
-    "x_dup_cluster_sizes",
-    "x_curation_pipeline_v2",
-    "q_new_vs_returning",
-    "m_shot_stats",
-    "x_band_balance",
-    "x_coverage_select",
-    "x_knn_hubness",
-    "x_stopword_discovery",
-    "m_flatness",
-    "q_cart_abandonment",
-    "x_weighted_jaccard",
-    "q_lorenz_curve",
-    "x_pack_efficiency",
-    "m_vad_segments",
-    "x_class_separation",
-    "q_punchcard",
-    "q_ab_power",
-    "x_bm25_precision",
-    "q_iqr_outliers",
-    "x_simhash_calibration",
-    "x_prefix_templates",
-    "q_ma_crossover",
-    "x_char_entropy",
-    "q_runs_test",
-    "q_abc_analysis",
-    "x_jaccard_curve",
-    "q_range_frame",
-    "x_sq8_recon_error",
-    "x_minhash_scurve",
-    "q_adoption_curve",
-    "x_soft_dedup",
-    "x_upsample_realize",
-    "x_shingle_df_histogram",
-    "q_seasonal_adjust",
-    "x_hard_negatives",
-    "x_cluster_purity",
-    "x_intrinsic_dim",
-    "q_fulfillment_latency",
-    "q_weekly_mix_share",
-    "x_vocab_growth",
-    "x_ttr_by_source",
-    "x_length_bias",
-    "q_interarrival",
-    "x_embedding_outliers",
-    "q_term_momentum",
-    "q_weekend_lift",
-    "q_weekly_ctr",
-    "q_aov_by_segment",
-    "x_sample_bias",
-    "x_chunk_inflation",
-    "q_return_rate",
-    "x_source_entropy",
-    "x_calibration",
-    "q_autocorrelation",
-    "q_cusum",
-]
-# Queries with a green driver verdict in CORRECTNESS_r01/r02 (union, 90).
-# They are regression-guarded by tests/test_oracle_parity.py, so they move to
-# the BACK of the registry: the driver's ~50-entry verification window per
-# round is the binding constraint, and every slot must go to a query that has
-# never had a driver verdict.  x_neardup_minhash / x_simhash_neardup re-enter
-# the round-3 window despite r02 verdicts because those verdicts were
-# rows-only; both now carry full value-hash oracles (recall-1 band configs).
-_DRIVER_VERIFIED_R01_R02 = frozenset({
-    "stg_top_terms", "stg_top_rising_terms", "stg_international_top_terms",
-    "stg_international_top_rising_terms", "weekly_trends_summary",
-    "top_terms_comparison", "trending_terms_analysis",
-    "m_frame_sample", "m_media_features", "m_patch_grid", "m_resize_plan",
-    "q_above_customer_avg", "q_asof_purchases", "q_compare_relations",
-    "q_customer_order_ranks", "q_customers_without_orders",
-    "q_date_spine_events", "q_event_type_stats", "q_event_value_moments",
-    "q_events_weekly", "q_json_props_stats", "q_order_quartiles",
-    "q_part_dollars", "q_pivot_events", "q_pricing_summary",
-    "q_priority_large_qty", "q_range_join_bands", "q_rank_reconstruction",
-    "q_regional_revenue", "q_revenue_cube", "q_revenue_percentiles",
-    "q_revenue_percentiles_approx", "q_revenue_rollup",
-    "q_rolling_7d_user_value", "q_session_windows", "q_sessionize_events",
-    "q_set_ops_cohorts", "q_surrogate_keys", "q_top_customers",
-    "q_unpivot_events", "q_weekday_except_all", "q_weekly_activity_full_outer",
-    "q_weekly_unique_users_approx", "q_weekly_wow_change",
-    "q_window_distributions", "s_stream_dedup_events",
-    "s_stream_distinct_users", "s_stream_purchase_attribution",
-    "s_stream_weekly_rollup", "x_chunk_documents", "x_corpus_ngrams",
-    "x_decontaminate", "x_dedup_canonical", "x_dedup_components",
-    "x_dedup_exact", "x_dup_span_coverage", "x_embedding_neardup",
-    "x_fingerprint", "x_hash_sample", "x_incremental_dedup", "x_ivf_assign",
-    "x_ivf_topk", "x_ivfpq_index_search", "x_ivfpq_topk", "x_kmeans_refine",
-    "x_knn_cosine_topk", "x_knn_lsh", "x_language_id", "x_language_profile",
-    "x_neardup_minhash", "x_ngram_containment", "x_ngram_jaccard",
-    "x_ngram_jaccard_filtered", "x_pack_documents", "x_pii_scrub",
-    "x_pq_encode", "x_pq_topk", "x_quality_score", "x_repetition_signals",
-    "x_semantic_search", "x_semdedup", "x_simhash_neardup",
-    "x_source_overlap", "x_text_stats", "x_tfidf_top_terms",
-    "x_token_counts", "x_token_histogram", "x_training_pipeline",
-    "x_unigram_logprob", "x_vocab_coverage",
-})
-
-# Queries with a green driver verdict in CORRECTNESS_r03 (all 50 green).
-_DRIVER_VERIFIED_R03 = frozenset({
-    "m_audio_windows", "m_phash_neardup", "q_large_volume_orders",
-    "q_market_share", "q_min_cost_supplier", "q_nation_profit",
-    "q_nation_trade", "q_returned_revenue", "q_shipping_priority",
-    "s_stream_sessionize", "s_stream_top_types",
-    "stg_international_top_rising_terms", "stg_international_top_terms",
-    "stg_top_rising_terms", "stg_top_terms", "top_terms_comparison",
-    "trending_terms_analysis", "weekly_trends_summary", "x_ann_recall",
-    "x_bm25_index_search", "x_bm25_search", "x_boilerplate_strip",
-    "x_bpe_merges", "x_bpe_segment", "x_curriculum_order",
-    "x_filter_funnel", "x_hashed_knn", "x_hybrid_rrf",
-    "x_incremental_neardup", "x_ivfpq_residual", "x_knn_graph",
-    "x_knn_pagerank", "x_l2_topk", "x_matryoshka_topk", "x_minhash_audit",
-    "x_mixture_plan", "x_mmr_topk", "x_neardup_minhash",
-    "x_neardup_minhash_checked", "x_quality_classifier",
-    "x_simhash_checked", "x_simhash_neardup", "x_source_caps",
-    "x_sq8_topk", "x_stratified_exact_n", "x_substring_contam",
-    "x_temperature_mix", "x_token_budget_select", "x_weighted_jaccard",
-    "x_winnowing",
-})
-
-# Round-4 driver window: positions 8-50.  Never-driver-verified queries per
-# VERDICT.md round-3 instruction #1: x_knn_lsh re-enters (its r02 verdict was
-# rows-only on a since-replaced implementation; the new SRP path has a
-# value-hash oracle but no driver verdict), then the streaming tail, the
-# curation/pipeline family, the high-value statistics queries, the four
-# perf-fix targets from this round (source_divergence, embedding_dim_stats,
-# theilsen, ks_test — so the fixes themselves get driver verification), the
-# remaining TPC-H-shaped relational queries, and the sampling family.
-_ROUND4_WINDOW = [
-    "x_knn_lsh",
-    "s_stream_ewma", "s_stream_hll", "s_stream_countmin", "s_stream_drift",
-    "s_stream_sliding_rollup", "s_stream_pysource", "s_stream_segment_rollup",
-    "x_curation_pipeline_v2", "x_rag_pipeline", "x_coverage_select",
-    "x_soft_dedup", "x_upsample_realize",
-    "q_hll_users", "q_bloom_prefilter", "q_retention_cohorts", "q_funnel",
-    "q_window_funnel", "q_markov_stationary", "q_holt_forecast",
-    "x_source_divergence", "x_embedding_dim_stats", "q_theilsen_trend",
-    "q_ks_test",
-    "q_order_priority_counts", "q_custdist", "q_promo_revenue",
-    "q_top_supplier", "q_important_parts", "q_late_shipments",
-    "q_dominant_suppliers", "q_blocking_suppliers", "q_idle_rich_customers",
-    "q_small_qty_revenue", "q_disjunctive_revenue", "q_brand_suppliers",
-    "q_decimal_revenue",
-    "x_hash_split", "x_cluster_sample", "x_importance_weights",
-    "x_training_order", "q_record_linkage", "x_cdc_chunks",
-]
-# Queries with a green driver verdict in CORRECTNESS_r04 (all 50 green).
-_DRIVER_VERIFIED_R04 = frozenset(_REFERENCE_MODELS) | frozenset(_ROUND4_WINDOW)
-
-# Round-5 driver window: positions 8-50.  Never-driver-verified queries per
-# VERDICT.md round-4 instruction #3: the queries rewritten two-phase this
-# round lead (stopword_discovery's regression fix, the NTILE family,
-# gini/lorenz, mannwhitney's below-cumsum, abc_analysis' revenue cumsum —
-# so the rewrites get driver verdicts immediately), then the
-# statistics/analytics family named in the brief, the textstats audit tail,
-# and the stateful singletons (Python DataSource, SQL-UDF macros).
-# x_weighted_sample yielded its slot to the abc rewrite: the sampling
-# family already holds the most driver verdicts, so it is the
-# least-marginal-information never-verified entry.
-_ROUND5_WINDOW = [
-    "x_stopword_discovery", "x_ppl_buckets", "x_length_bias",
-    "q_rfm_segments", "q_gini", "q_lorenz_curve",
-    "q_churn", "q_ltv_cohorts", "q_kaplan_meier", "q_mannwhitney",
-    "q_ols_trend", "q_autocorrelation", "q_cusum", "q_spearman",
-    "q_wilson_ranking", "q_chisquare", "q_bootstrap_ci", "q_benford",
-    "q_ab_ztest", "q_ab_power", "q_runs_test", "q_seasonality",
-    "q_seasonal_adjust", "q_iqr_outliers", "q_histogram_quantiles",
-    "q_weekly_correlation", "q_weekly_anomalies",
-    "x_zipf_slope", "x_char_entropy", "x_ttr_by_source",
-    "x_source_entropy", "x_vocab_growth", "x_pmi_collocations",
-    "x_langid_confusion", "x_corpus_report", "x_prefix_templates",
-    "q_python_datasource", "q_sql_udf_macros",
-    "q_user_ewma", "q_forecast_revenue", "q_event_transitions",
-    "q_interpolate_daily", "q_abc_analysis",
-]
-# Queries with a green driver verdict in CORRECTNESS_r05 (all 50 green).
-_DRIVER_VERIFIED_R05 = frozenset(_REFERENCE_MODELS) | frozenset(_ROUND5_WINDOW)
-
-# Round-6 driver window: positions 8-50.  43 of the 71 never-driver-verified
-# queries, ordered per VERDICT.md round-5 instruction #1: x_quality_auc first
-# (it carries an allowlisted two-phase rewrite with no driver verdict), then
-# d_metrics_events and q_variant_props (Spark-4-specific codepaths), the
-# kNN-graph family (the heaviest plans in the registry), the multimodal m_*
-# tail, the calibration/recall-audit tail, the similarity/embedding tail,
-# the dedup-diagnostics tail, and the textstats tail.  q_linear_counting
-# rounds out the window as the hash-exact twin of the two permanent
-# rows-only accuracy sketches (see module docstring).
-_ROUND6_WINDOW = [
-    "x_quality_auc",
-    "d_metrics_events", "q_variant_props",
-    "x_knn_bfs", "x_knn_homophily", "x_knn_clustering", "x_knn_hubness",
-    "m_patch_stats", "m_scene_changes", "m_shot_stats", "m_flatness",
-    "m_vad_segments",
-    "x_calibration", "x_simhash_calibration", "x_minhash_scurve",
-    "x_bm25_precision", "x_retrieval_ndcg", "x_jaccard_curve",
-    "x_sq8_recon_error", "x_cluster_purity", "x_class_separation",
-    "x_sample_bias",
-    "x_sq8_encode", "x_binary_hamming", "x_hashed_embedding",
-    "x_pca_power", "x_intrinsic_dim", "x_embedding_outliers",
-    "x_hard_negatives", "x_bitext_mining",
-    "x_dedup_quality_canonical", "x_dup_cluster_sizes", "x_band_balance",
-    "x_shingle_df_histogram",
-    "x_bigram_logprob", "x_tokenizer_fertility", "x_ngram_novelty",
-    "x_text_tiling", "x_search_snippets", "x_countmin_heavy",
-    "x_adaptive_quality", "x_blocklist_filter",
-    "q_linear_counting",
-]
-
-# Queries with a green driver verdict in CORRECTNESS_r06 (all 50 green).
-_DRIVER_VERIFIED_R06 = frozenset(_REFERENCE_MODELS) | frozenset(_ROUND6_WINDOW)
-
-# Round-7 window, first block: the 28 never-verified queries pre-staged in
-# round 6 (VERDICT.md round-6 instruction #1).  Once CORRECTNESS_r07 records
-# these green, cumulative driver coverage is 287/287 (285 hash-green + the
-# 2 permanently rows-only accuracy sketches).
-_ROUND7_PRESTAGE = [
-    "q_profile_orders", "q_zorder_keys", "q_key_skew",
-    "q_table_fingerprints", "q_session_paths", "q_conversion_lag",
-    "q_association_rules", "q_sequence_match", "q_audience_overlap",
-    "q_stickiness", "q_new_vs_returning", "q_cart_abandonment",
-    "q_punchcard", "q_ma_crossover", "q_range_frame", "q_adoption_curve",
-    "q_fulfillment_latency", "q_weekly_mix_share", "q_interarrival",
-    "q_term_momentum", "q_weekend_lift", "q_weekly_ctr",
-    "q_aov_by_segment", "q_return_rate",
-    "x_pack_positions", "x_pack_efficiency", "x_chunk_inflation",
-    "x_weighted_sample",
-]
-
-# Round-7 window, second block: the 15 spare slots (50 - 7 models - 28)
-# re-verify queries whose accumulators were widened in round 6's block-3
-# int128/decimal audit AFTER their last driver verdict (VERDICT.md round-6
-# instruction #2) — local parity is green at 3 SFs plus edge/unicode twins,
-# but the driver oracle is the hard signal.  Block 3 touched 18
-# stale-verified queries; ranked by widening-diff size (changed lines in
-# 883b1d8^..r6-final per function + its oracle SQL), the 15 largest get the
-# slots.  Dropped (smallest, single sum->decimal casts whose exact pattern
-# is exercised by q_pricing_summary / q_event_value_moments in-window):
-# q_regional_revenue (7 lines), q_nation_profit (6), q_seasonality (6).
-# q_bootstrap_ci takes a slot regardless of diff rank: its CI bounds change
-# AGAIN this round (ADVICE r6: NULL bounds for m < 4 valid replicas).
-# q_abc_analysis and q_seasonal_adjust were widened too but missing from
-# the VERDICT list — both verified r5, both pre-widening, both included.
-_ROUND7_STALE_REVERIFY = [
-    "q_weekly_correlation", "q_mannwhitney", "q_autocorrelation",
-    "q_pricing_summary", "q_chisquare", "q_ols_trend", "q_abc_analysis",
-    "q_event_value_moments", "q_lorenz_curve", "q_ks_test", "q_benford",
-    "q_seasonal_adjust", "x_pmi_collocations", "q_gini", "q_bootstrap_ci",
-]
-
-_ROUND7_WINDOW = _ROUND7_PRESTAGE + _ROUND7_STALE_REVERIFY
-
-# Queries with a green driver verdict in CORRECTNESS_r07 (all 50 green).
-_DRIVER_VERIFIED_R07 = frozenset(_REFERENCE_MODELS) | frozenset(_ROUND7_WINDOW)
-
-# Round-8 window, block 1: the five NEW queries — the round-7-staged
-# txn-table ACID wave (time travel, file-pruned MERGE, data skipping,
-# change-data-feed -> incremental-dedup consumer) plus the embedding-
-# generation bridge (VERDICT r7 #1/#3).
-_ROUND8_NEW = [
-    "q_txn_timetravel", "q_txn_merge_cdc", "q_txn_skipping_scan",
-    "q_txn_cdf_dedup", "x_embed_bridge",
-]
-
-# Block 2: queries whose CODE changed during round 7 AFTER their last driver
-# verdict (VERDICT r7 #5 — local parity is green, but the driver oracle is
-# the hard signal).  Sources of change: the NULL-on-zero denominator guards
-# (quality_score alpha, funnel ppm, Spearman, AUC single-class, fertility
-# zero-token), the quantile_bucket literal-boundaries rewrite (theilsen;
-# ks/mannwhitney re-verified in r7 already), the kNN-gemm NULL-vector base
-# guard (every knn_graph_edges consumer), and the MEDIA/FEATURE_SCHEMA
-# nullable-id fix (every docs_as_media consumer).
-_ROUND8_FIX_REVERIFY = [
-    "x_quality_score", "x_quality_classifier", "q_funnel", "q_spearman",
-    "x_quality_auc", "x_tokenizer_fertility", "q_theilsen_trend",
-    "x_knn_graph", "x_knn_pagerank", "x_knn_bfs", "x_knn_homophily",
-    "x_knn_clustering", "x_knn_hubness",
-    "m_media_features", "m_patch_grid", "m_frame_sample", "m_resize_plan",
-    "m_phash_neardup", "m_audio_windows",
-]
-
-# Block 3: the three int128/decimal-widened queries round 7 dropped for
-# space (VERDICT r6 #2 listed them as the smallest single-cast widenings;
-# their exact pattern was exercised in-window, but their own rows were not).
-_ROUND8_WIDENED_REVERIFY = ["q_regional_revenue", "q_nation_profit", "q_seasonality"]
-
-# Block 4: the oldest driver verdicts (r1/r2 vintage, VERDICT r7 #5) —
-# structurally diverse picks across windows/ranks, as-of/range joins,
-# set ops, sessionization, grouping sets, and the money-width staples.
-_ROUND8_OLDEST_REVERIFY = [
-    "q_top_customers", "q_part_dollars", "q_revenue_percentiles",
-    "q_revenue_cube", "q_revenue_rollup", "q_rolling_7d_user_value",
-    "q_customer_order_ranks", "q_rank_reconstruction", "q_asof_purchases",
-    "q_range_join_bands", "q_customers_without_orders",
-    "q_sessionize_events", "q_session_windows", "q_weekly_wow_change",
-    "q_set_ops_cohorts", "q_weekly_activity_full_outer",
-]
-
-_ROUND8_WINDOW = (
-    _ROUND8_NEW + _ROUND8_FIX_REVERIFY + _ROUND8_WIDENED_REVERIFY
-    + _ROUND8_OLDEST_REVERIFY
 )
+# query -> verdict round of its last code change; an entry leads only until
+# a verdict of that round or newer records the query green
+_CHANGED_IN_ROUND = {
+    **dict.fromkeys((
+        "q_markov_stationary", "x_bm25_index_search", "x_pca_power",
+        "x_knn_bfs", "x_mmr_topk", "x_bpe_merges", "x_dedup_components",
+        "x_dup_cluster_sizes", "x_dedup_quality_canonical",
+        "x_coverage_select", "q_txn_merge_cdc", "q_txn_clone",
+        "x_cdf_reembed", "q_txn_ndv_stats", "q_txn_sketch_overlap",
+        "s_stream_attribution_outer", "q_txn_partitioned_prune",
+        "q_txn_dynamic_overwrite", "q_txn_partition_stats",
+    ), 14),
+    **dict.fromkeys((
+        "x_knn_pagerank", "x_label_propagation", "q_theilsen_trend",
+        "q_ks_test", "q_mannwhitney", "x_length_bias", "q_txn_identity",
+        "q_txn_zorder_box", "q_txn_cluster_prune",
+    ), 15),
+}
 
-# Queries with a green driver verdict in CORRECTNESS_r08 (all 50 green).
-_DRIVER_VERIFIED_R08 = frozenset(_REFERENCE_MODELS) | frozenset(_ROUND8_WINDOW)
 
-# Round-9 window, block 1: the TEN NEW queries — the round-8-staged txn
-# DML/ops wave (deletion-vector DELETE/UPDATE, RESTORE, Bloom-index point
-# lookups, CDF-driven incremental MV, streaming log tail), the
-# txn-materialized mart time travel (VERDICT r8 #5), the cross-encoder
-# rerank bridge, and the two privacy-governance audits (VERDICT r8 #1).
-_ROUND9_NEW = [
-    "q_txn_dv_delete", "q_txn_dv_update", "q_txn_restore",
-    "q_txn_bloom_lookup", "q_txn_incremental_mv", "s_stream_txn_tail",
-    "q_txn_mart_timetravel", "x_rerank_bridge", "x_k_anonymity",
-    "x_l_diversity",
-]
+def _latest_green_round() -> dict[str, int]:
+    latest: dict[str, int] = {}
+    for path in Path(__file__).resolve().parents[1].glob("CORRECTNESS_r*.json"):
+        tag = path.stem.removeprefix("CORRECTNESS_r")
+        if not tag.isdigit():
+            continue
+        for name, v in json.loads(path.read_text()).items():
+            if v.get("err") is None and all(
+                v.get(k) is True for k in ("rows_match", "schema_match", "hash_match")
+            ):
+                latest[name] = max(latest.get(name, 0), int(tag))
+    return latest
 
-# Block 2: the oldest driver vintages (VERDICT r8 #3) — every pick below
-# was last driver-verified in ROUND 2 (x_incremental_neardup: round 3,
-# pulled forward because BENCH_r08 showed a contention-suspect uptick on
-# it — a fresh verdict + baseline read settles it).  Structurally diverse
-# across relational staples, streaming twins, the dedup family, vector
-# search, and text analysis; the remaining r2/r3 vintages rotate in r10.
-_ROUND9_OLDEST_REVERIFY = [
-    "q_above_customer_avg", "q_compare_relations", "q_date_spine_events",
-    "q_event_type_stats", "q_events_weekly", "q_json_props_stats",
-    "q_order_quartiles", "q_pivot_events", "q_priority_large_qty",
-    "q_surrogate_keys", "q_unpivot_events", "q_weekday_except_all",
-    "q_window_distributions",
-    "s_stream_dedup_events", "s_stream_distinct_users",
-    "s_stream_purchase_attribution", "s_stream_weekly_rollup",
-    "x_dedup_exact", "x_dedup_canonical", "x_dedup_components",
-    "x_embedding_neardup", "x_incremental_dedup", "x_incremental_neardup",
-    "x_knn_cosine_topk", "x_semantic_search", "x_ivf_topk", "x_ivfpq_topk",
-    "x_pq_encode",
-    "x_text_stats", "x_token_counts", "x_language_id", "x_tfidf_top_terms",
-    "x_pii_scrub",
-]
 
-_ROUND9_WINDOW = _ROUND9_NEW + _ROUND9_OLDEST_REVERIFY
+_LATEST_GREEN = _latest_green_round()
 
-# Queries with a green driver verdict in CORRECTNESS_r09 (all 50 green).
-_DRIVER_VERIFIED_R09 = frozenset(_REFERENCE_MODELS) | frozenset(_ROUND9_WINDOW)
 
-# Round-10 window, block 1: the SEVEN staged txn-ops queries (VERDICT r9
-# #1 — replaceWhere backfill, Z-order box scan, vacuum lifecycle, shallow
-# clone what-if, streaming CDF source, CDF-driven incremental re-embed,
-# RAG parent retrieval) plus the TWO reformulated former no-oracle rows
-# (VERDICT r9 #2 — the value-distribution exact percentile and the KMV
-# bottom-k distinct estimator, both now fully value-hash oracled; their
-# only prior driver rows are r1 `err: no_oracle`).
-_ROUND10_NEW = [
-    "q_txn_replace_where", "q_txn_zorder_box", "q_txn_vacuum",
-    "q_txn_clone", "s_stream_txn_cdf", "x_cdf_reembed",
-    "x_parent_retrieval",
-    "q_revenue_percentiles_approx", "q_weekly_unique_users_approx",
-]
+def _verify_order(name: str) -> tuple[int, int]:
+    green = _LATEST_GREEN.get(name, 0)
+    if name in _REFERENCE_MODELS:
+        return (0, 0)
+    return (1 if _CHANGED_IN_ROUND.get(name, 0) > green else 2, green)
 
-# Block 2: the vintage-tail drain (VERDICT r9 #3) — ALL 22 queries whose
-# last driver verdict is round 1 or 2, then 12 structurally diverse
-# round-3 vintages (TPC-H relational staples, both streaming twins, the
-# two top-cost text-index/near-dup queries, ANN recall + hybrid fusion).
-# The 24 remaining r3 vintages rotate in the round-11 window:
-# x_bm25_search, x_boilerplate_strip, x_bpe_merges, x_bpe_segment,
-# x_curriculum_order, x_filter_funnel, x_hashed_knn, x_ivfpq_residual,
-# x_l2_topk, x_matryoshka_topk, x_minhash_audit, x_mixture_plan,
-# x_mmr_topk, x_neardup_minhash, x_neardup_minhash_checked,
-# x_simhash_checked, x_source_caps, x_sq8_topk, x_stratified_exact_n,
-# x_substring_contam, x_temperature_mix, x_token_budget_select,
-# x_weighted_jaccard, x_winnowing.
-_ROUND10_OLDEST_REVERIFY = [
-    # r1 vintage (4)
-    "x_corpus_ngrams", "x_repetition_signals", "x_unigram_logprob",
-    "x_vocab_coverage",
-    # r2 vintage (18)
-    "x_chunk_documents", "x_decontaminate", "x_dup_span_coverage",
-    "x_fingerprint", "x_hash_sample", "x_ivf_assign",
-    "x_ivfpq_index_search", "x_kmeans_refine", "x_language_profile",
-    "x_ngram_containment", "x_ngram_jaccard", "x_ngram_jaccard_filtered",
-    "x_pack_documents", "x_pq_topk", "x_semdedup", "x_source_overlap",
-    "x_token_histogram", "x_training_pipeline",
-    # r3 vintage (12 of 36)
-    "q_large_volume_orders", "q_market_share", "q_min_cost_supplier",
-    "q_nation_trade", "q_returned_revenue", "q_shipping_priority",
-    "s_stream_sessionize", "s_stream_top_types",
-    "x_simhash_neardup", "x_bm25_index_search", "x_ann_recall",
-    "x_hybrid_rrf",
-]
 
-_ROUND10_WINDOW = _ROUND10_NEW + _ROUND10_OLDEST_REVERIFY
-
-# Queries with a green driver verdict in CORRECTNESS_r10 (all 50 green).
-_DRIVER_VERIFIED_R10 = frozenset(_REFERENCE_MODELS) | frozenset(_ROUND10_WINDOW)
-
-# Round-11 window, block 1: the ELEVEN round-10-staged queries (VERDICT r10
-# #1) in staging order — generated columns, NDV stats, sketch overlap,
-# MaxSim rerank, semi-hard negatives, streaming KMV, PRF expansion,
-# recursive CTE, left-outer streaming attribution, PSI drift, full MERGE
-# grammar.  All carried DuckDB oracles, plan-audit-clean plans, degenerate
-# sweeps, and pooled-scenario coverage before registering.
-_ROUND11_NEW = [
-    "q_txn_generated_cols", "q_txn_ndv_stats", "q_txn_sketch_overlap",
-    "x_maxsim_rerank", "x_semihard_negatives", "s_stream_kmv_users",
-    "x_prf_expansion", "q_recursive_hierarchy", "s_stream_attribution_outer",
-    "x_psi_drift", "q_txn_merge_when",
-]
-
-# Block 2: the vintage-tail rotation (VERDICT r10 #3) — ALL 24 remaining
-# round-3 vintages (named in the round-10 comment above), then 8
-# structurally diverse round-4 vintages (streaming sketches, the two
-# end-to-end pipeline composites, analytic staples, LSH vector search,
-# decimal-discipline revenue).  The 32 remaining r4 vintages rotate in the
-# round-12 window: q_blocking_suppliers, q_bloom_prefilter,
-# q_brand_suppliers, q_custdist, q_disjunctive_revenue,
-# q_dominant_suppliers, q_hll_users, q_holt_forecast,
-# q_idle_rich_customers, q_important_parts, q_late_shipments,
-# q_order_priority_counts, q_promo_revenue, q_record_linkage,
-# q_retention_cohorts, q_small_qty_revenue, q_top_supplier,
-# s_stream_countmin, s_stream_ewma, s_stream_pysource,
-# s_stream_segment_rollup, s_stream_sliding_rollup, x_cdc_chunks,
-# x_cluster_sample, x_coverage_select, x_embedding_dim_stats, x_hash_split,
-# x_importance_weights, x_soft_dedup, x_source_divergence,
-# x_training_order, x_upsample_realize.
-_ROUND11_OLDEST_REVERIFY = [
-    # r3 vintage (all 24)
-    "x_bm25_search", "x_boilerplate_strip", "x_bpe_merges", "x_bpe_segment",
-    "x_curriculum_order", "x_filter_funnel", "x_hashed_knn",
-    "x_ivfpq_residual", "x_l2_topk", "x_matryoshka_topk", "x_minhash_audit",
-    "x_mixture_plan", "x_mmr_topk", "x_neardup_minhash",
-    "x_neardup_minhash_checked", "x_simhash_checked", "x_source_caps",
-    "x_sq8_topk", "x_stratified_exact_n", "x_substring_contam",
-    "x_temperature_mix", "x_token_budget_select", "x_weighted_jaccard",
-    "x_winnowing",
-    # r4 vintage (8 of 40)
-    "s_stream_hll", "s_stream_drift", "x_rag_pipeline",
-    "x_curation_pipeline_v2", "q_window_funnel", "q_markov_stationary",
-    "x_knn_lsh", "q_decimal_revenue",
-]
-
-_ROUND11_WINDOW = _ROUND11_NEW + _ROUND11_OLDEST_REVERIFY
-
-# Queries with a green driver verdict in CORRECTNESS_r11 (all 50 green).
-_DRIVER_VERIFIED_R11 = frozenset(_REFERENCE_MODELS) | frozenset(_ROUND11_WINDOW)
-
-# Round-12 window, block 1: the NINE new queries — the eight round-11-staged
-# (VERDICT r11 #1: partition pruning, dynamic partition overwrite, log-only
-# partition stats, RENAME COLUMN, identity columns, partitioned streaming
-# tail, DPO preference pairs, T5 span corruption) plus the clustering-keys
-# declare -> compact -> box-scan-prune demo (VERDICT r11 #3) built this
-# round.  All carry DuckDB oracles, plan-audit-clean plans, degenerate
-# sweeps, and pooled-scenario coverage.
-_ROUND12_NEW = [
-    "q_txn_partitioned_prune", "q_txn_dynamic_overwrite",
-    "q_txn_partition_stats", "q_txn_rename_col", "q_txn_identity",
-    "s_stream_partitioned_tail", "x_preference_pairs", "x_span_corruption",
-    "q_txn_cluster_prune",
-]
-
-# Block 2: the vintage-tail rotation (VERDICT r11 #2) — ALL 32 remaining
-# round-4 vintages (named in the round-11 comment above), then the 2 oldest
-# round-5 vintages in their r5 window order.  The ninth new query
-# (q_txn_cluster_prune, VERDICT r11 #3) takes the slot the SCALE.md plan
-# gave a third r5; the r5 drain continues at the front of the r13 reverify
-# block (next oldest: x_length_bias, q_rfm_segments, q_churn, ...).
-_ROUND12_OLDEST_REVERIFY = [
-    # r4 vintage (all 32)
-    "q_blocking_suppliers", "q_bloom_prefilter", "q_brand_suppliers",
-    "q_custdist", "q_disjunctive_revenue", "q_dominant_suppliers",
-    "q_hll_users", "q_holt_forecast", "q_idle_rich_customers",
-    "q_important_parts", "q_late_shipments", "q_order_priority_counts",
-    "q_promo_revenue", "q_record_linkage", "q_retention_cohorts",
-    "q_small_qty_revenue", "q_top_supplier", "s_stream_countmin",
-    "s_stream_ewma", "s_stream_pysource", "s_stream_segment_rollup",
-    "s_stream_sliding_rollup", "x_cdc_chunks", "x_cluster_sample",
-    "x_coverage_select", "x_embedding_dim_stats", "x_hash_split",
-    "x_importance_weights", "x_soft_dedup", "x_source_divergence",
-    "x_training_order", "x_upsample_realize",
-    # r5 vintage (2 oldest, r5 window order)
-    "x_stopword_discovery", "x_ppl_buckets",
-]
-
-_ROUND12_WINDOW = _ROUND12_NEW + _ROUND12_OLDEST_REVERIFY
-
-# Queries with a green driver verdict in CORRECTNESS_r12 (all 50 green).
-_DRIVER_VERIFIED_R12 = frozenset(_REFERENCE_MODELS) | frozenset(_ROUND12_WINDOW)
-
-# =============================================================================
-# ROUND-13 WINDOW — THE ONE PINNED LIST (VERDICT r12 "What's wrong" #2).
-# SCALE.md's round-12 notes hold three successive drafts of this plan
-# (6-staged / 7-staged / 8-staged arithmetic); THIS block is the final,
-# binding form and supersedes all of them:
-#   7 reference models + 8 round-12-staged new + 27 r5 vintages (ALL that
-#   remain — the r5 drain completes this round) + 8 oldest r6 vintages
-#   = 50, reverify share 42.
-# The 27 r5 names below are exactly the queries whose latest green driver
-# verdict is CORRECTNESS_r05 (recomputed mechanically over all twelve
-# CORRECTNESS files), in their r5 window order; the 8 r6 names are the
-# oldest r6-vintage entries in their r6 window order.
-# =============================================================================
-
-# Block 1: the EIGHT round-12-staged queries (VERDICT r12 #1) in staging
-# order — label-propagation communities, Kneser-Ney bigram perplexity,
-# partitioned-source incremental MV, the SentencePiece unigram-LM trilogy
-# (EM, fertility, pruning round), session-trajectory near-dup, and GRPO
-# group-relative advantages.  All carry DuckDB oracles, plan-audit-clean
-# plans, degenerate sweeps, and pooled-scenario coverage.
-_ROUND13_NEW = [
-    "x_label_propagation", "x_kneser_ney_ppl", "q_txn_mv_partitioned",
-    "x_unigram_lm_em", "x_unigram_fertility", "x_trajectory_neardup",
-    "x_group_advantages", "x_unigram_pruned",
-]
-
-# Block 2: the vintage-tail rotation (VERDICT r12 #2) — ALL 27 remaining
-# round-5 vintages in r5 window order (the r5 vintage drains COMPLETELY;
-# the oldest surviving vintage becomes r6), then the 8 oldest round-6
-# vintages in r6 window order.
-_ROUND13_OLDEST_REVERIFY = [
-    # r5 vintage (all 27 remaining)
-    "x_length_bias", "q_rfm_segments", "q_churn", "q_ltv_cohorts",
-    "q_kaplan_meier", "q_cusum", "q_wilson_ranking", "q_ab_ztest",
-    "q_ab_power", "q_runs_test", "q_iqr_outliers", "q_histogram_quantiles",
-    "q_weekly_anomalies", "x_zipf_slope", "x_char_entropy",
-    "x_ttr_by_source", "x_source_entropy", "x_vocab_growth",
-    "x_langid_confusion", "x_corpus_report", "x_prefix_templates",
-    "q_python_datasource", "q_sql_udf_macros", "q_user_ewma",
-    "q_forecast_revenue", "q_event_transitions", "q_interpolate_daily",
-    # r6 vintage (8 oldest, r6 window order)
-    "d_metrics_events", "q_variant_props", "m_patch_stats",
-    "m_scene_changes", "m_shot_stats", "m_flatness", "m_vad_segments",
-    "x_calibration",
-]
-
-_ROUND13_WINDOW = _ROUND13_NEW + _ROUND13_OLDEST_REVERIFY
-
-_front = _REFERENCE_MODELS + _ROUND13_WINDOW
-assert set(_front) <= set(QUERIES), sorted(set(_front) - set(QUERIES))
-assert len(_front) == len(set(_front)) == 50, len(_front)
-# Past the window: every remaining query has a driver verdict from a prior
-# round (regression-guarded by pytest) — no never-verified entries remain.
-_DRIVER_VERIFIED = (
-    _DRIVER_VERIFIED_R01_R02 | _DRIVER_VERIFIED_R03 | _DRIVER_VERIFIED_R04
-    | _DRIVER_VERIFIED_R05 | _DRIVER_VERIFIED_R06 | _DRIVER_VERIFIED_R07
-    | _DRIVER_VERIFIED_R08 | _DRIVER_VERIFIED_R09 | _DRIVER_VERIFIED_R10
-    | _DRIVER_VERIFIED_R11 | _DRIVER_VERIFIED_R12
-) - set(_ROUND13_WINDOW)
-_rest = [n for n in QUERIES if n not in set(_front)]
-_tail_unverified = [n for n in _rest if n not in _DRIVER_VERIFIED]
-# Window accounting: with the round-10 window in place, every query outside
-# the window carries a prior-round driver verdict.
-assert _tail_unverified == [], _tail_unverified[:5]
-QUERIES = {name: QUERIES[name] for name in _front + _rest}
+QUERIES = {name: QUERIES[name] for name in sorted(QUERIES, key=_verify_order)}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

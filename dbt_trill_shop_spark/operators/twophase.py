@@ -73,8 +73,8 @@ def md5_bucket(h: Column, chars: int = 3) -> Column:
 def _bucket_by_boundaries(
     df: DataFrame, key: str, qs: list, out: str = "__tp_qb"
 ) -> DataFrame:
-    """``out`` = number of boundaries in the SORTED literal list ``qs``
-    that are <= the row's ``key`` — the quantile_bucket counting rule, as
+    """``out`` = number of boundaries in the literal list ``qs`` that are
+    <= the row's ``key`` — the quantile_bucket counting rule, as
     a power-of-two upper-bound BINARY SEARCH over one folded array
     literal (8 ``element_at`` probes for 255 boundaries) instead of the
     previous ``F.aggregate`` lambda, which higher-order-function-walks
@@ -89,7 +89,11 @@ def _bucket_by_boundaries(
     exactly the linear count's behavior.  The ``pos + w > m`` guard
     branches BEFORE ``element_at`` (lazy CaseWhen), so ANSI mode never
     sees an out-of-range index when ``len(qs) + 1`` is not a power of
-    two."""
+    two.  The search needs ``qs`` ascending, so it is sorted here; an
+    empty ``qs`` counts zero for every row — the constant bucket 0."""
+    if not qs:
+        return df.withColumn(out, F.lit(0).cast("bigint"))
+    qs = sorted(qs)
     m = len(qs)
     arr = F.lit(qs)
     w = 1 << (m.bit_length() - 1)
@@ -152,10 +156,6 @@ def quantile_bucket(
         ).alias("__tp_qs")
     ).first()
     qs = list(row[0]) if row is not None and row[0] is not None else []
-    if not qs:
-        # empty input: no rows to bucket — a constant satisfies the
-        # monotone-bucket contract vacuously.
-        return df.withColumn("__tp_qb", F.lit(0).cast("bigint"))
     return _bucket_by_boundaries(df, key, qs)
 
 

@@ -46,7 +46,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import col as F_col
-from pyspark.sql.functions import lit as F_lit
 from pyspark.sql.functions import percentile_approx as F_percentile_approx
 
 from ..localrel import values_relation
@@ -3955,16 +3954,8 @@ def compact_txn(
         ).first()
         qa = list(qrow[0]) if qrow is not None and qrow[0] is not None else []
         qb = list(qrow[1]) if qrow is not None and qrow[1] is not None else []
-        df = (
-            _bucket_by_boundaries(df, a, qa, out="__za")
-            if qa
-            else df.withColumn("__za", F_lit(0).cast("bigint"))
-        )
-        df = (
-            _bucket_by_boundaries(df, b, qb, out="__zb")
-            if qb
-            else df.withColumn("__zb", F_lit(0).cast("bigint"))
-        )
+        df = _bucket_by_boundaries(df, a, qa, out="__za")
+        df = _bucket_by_boundaries(df, b, qb, out="__zb")
         z = _morton_expr("CAST(__za AS INT)", "CAST(__zb AS INT)", bits=8)
         df = (
             df.withColumn("__z", z)

@@ -28,11 +28,12 @@ def _px_minhash_finds_planted_near_dups(spark, sf_dir):
         .withColumn("text", F.concat(F.col("text"), F.lit(" extraword")))
     )
     both = docs.union(planted)
-    pairs = dedup.minhash_near_duplicates(both, jaccard_threshold=0.5, seed=42)
+    pairs = dedup.neardup_minhash_native(both, jaccard_threshold=0.5)
     found = pairs.filter(
         (F.col("id_b") - F.col("id_a") == 1_000_000) & (F.col("id_a") < 5)
     ).count()
-    assert found >= 4  # LSH is approximate; near-identical docs must mostly hit
+    # banding is approximate; near-identical docs must mostly hit
+    assert found >= 4
 
 
 def _px_simhash_near_dup_hamming(spark, sf_dir):
@@ -1388,6 +1389,36 @@ def test_jaccard_curve_empty_pair_corpus(spark):
     out = dedup.jaccard_threshold_curve(docs, shingle_len=3).collect()
     assert len(out) == 7
     assert all(r["n_pairs"] == 0 and r["n_candidates"] == 0 for r in out)
+
+
+def test_knn_graph_operators_ignore_duplicate_id_rows(spark, tmp_path):
+    """A vec_id that appears twice is ONE graph node, as in the oracles'
+    ``SELECT DISTINCT vec_id``: PageRank and label propagation must emit
+    it once, with the rank and label the oracle computes.  The repeated
+    node is a far outlier and k = 1, so it sits in nobody's top-k and its
+    own single edge is the same in both engines — only the node set can
+    tell the duplicate apart."""
+    import duckdb
+    import pandas as pd
+
+    from .oracle_utils import compare, oracle_frame
+
+    pts = [(0.0, 0.0), (0.3, 0.1), (1.1, 0.9), (1.0, 1.4), (5.0, 5.2),
+           (5.6, 4.9), (9.0, 0.5), (8.7, 1.3)]
+    rows = [(i, [x, y]) for i, (x, y) in enumerate(pts)]
+    rows += [(99, [80.0, -70.0])] * 2
+    path = str(tmp_path / "embeddings.parquet")
+    pd.DataFrame(rows, columns=["vec_id", "embedding"]).to_parquet(path)
+    emb = spark.read.parquet(path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
+    for got, sql in (
+        (similarity.knn_pagerank(emb, k=1, n_iters=3),
+         similarity.knn_pagerank_sql(k=1, n_iters=3)),
+        (similarity.knn_label_propagation(emb, k=1, n_iters=2),
+         similarity.knn_label_propagation_sql(k=1, n_iters=2)),
+    ):
+        assert compare(got, oracle_frame(con, sql)) == []
 
 
 def _px_knn_pagerank_over_ivf_candidates_recall(spark, sf_dir):

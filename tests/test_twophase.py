@@ -8,6 +8,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from dbt_trill_shop_spark.operators.twophase import (
+    _bucket_by_boundaries,
     bucketed_cumsum,
     bucketed_ntile,
     bucketed_rank,
@@ -245,6 +246,22 @@ def test_quantile_bucket_null_and_nan_keys(spark):
     assert rows[4] == 0  # NULL -> minimum bucket
     assert rows[5] == max(rows.values())  # NaN -> maximum bucket
     assert rows[1] <= rows[2] <= rows[3]
+
+
+def _boundary_buckets(spark, qs):
+    df = spark.range(-6, 46).select(F.col("id").cast("double").alias("k"))
+    out = _bucket_by_boundaries(df, "k", qs, out="b")
+    return {int(r.k): r.b for r in out.collect()}
+
+
+def test_bucket_by_boundaries_empty_list_is_constant_bucket(spark):
+    assert set(_boundary_buckets(spark, []).values()) == {0}
+
+
+def test_bucket_by_boundaries_unsorted_list_matches_linear_count(spark):
+    qs = [17.0, -3.0, 40.0, 0.0, 17.0, 5.0]
+    got = _boundary_buckets(spark, qs)
+    assert got == {k: sum(q <= k for q in qs) for k in got}
 
 
 def test_quantile_bucket_branch_consistency_without_exchange_reuse(spark):
