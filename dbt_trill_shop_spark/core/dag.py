@@ -2,7 +2,8 @@
 
 Pipeline per SURVEY.md §3.1: parse (Python registration) -> DAG assembly
 (deps = ``ref`` edges) -> topo-ordered materialization (view / table) ->
-data tests per node, short-circuited.
+data tests per node, all of a model's row-level tests counted in one fused
+aggregate.
 
 Materialization mapping:
 

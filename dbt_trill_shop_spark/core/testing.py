@@ -13,12 +13,15 @@ We add the dbt_utils-style tests the project declares but never uses
 thresholds, and ``store_failures`` (violations persisted for audit) — the
 dbt-core knobs a real project sets in its schema YAML.
 
-Scale posture: every default-config test is compiled to a *violations
-DataFrame* and executed via ``.isEmpty()`` — Spark's ``limit(1)``-based probe
-— so a failing test on a 100 TB table short-circuits instead of scanning
-everything.  Violation *counts* are computed only when a non-default
-threshold (or a failure needing diagnostics) requires them; ``sample_limit``
-rows are collected only on non-pass, for diagnostics.
+Scale posture: a model's row-level tests (``not_null``, ``accepted_values``,
+``accepted_range``, ``finite``, configured or not) are each one boolean
+violation condition, so :func:`run_model_tests` counts all of them in ONE
+fused aggregate over the relation (``count_if`` per test) — one scan, and one
+re-derivation of a staging view, instead of one probe job per test.  Set-level
+tests (``unique``, ``unique_combination``, ``relationships``) need a grouping
+or a join, so each takes its count from ``violations(df).count()``.  Every
+result carries the exact violation count; ``sample_limit`` rows are collected
+only on non-pass, for diagnostics.
 """
 
 from __future__ import annotations
@@ -38,54 +41,66 @@ class DataTest(Protocol):
     def describe(self) -> str: ...
 
 
-@dataclass(frozen=True)
-class NotNull:
-    column: str
+class RowTest:
+    """A test whose violations are exactly the rows matching one boolean
+    ``condition()``, so it can be counted inside the model's fused
+    aggregate."""
+
+    def condition(self) -> Column:
+        raise NotImplementedError
 
     def violations(self, df: DataFrame) -> DataFrame:
-        return df.filter(F.col(self.column).isNull())
+        return df.filter(self.condition())
+
+
+@dataclass(frozen=True)
+class NotNull(RowTest):
+    column: str
+
+    def condition(self) -> Column:
+        return F.col(self.column).isNull()
 
     def describe(self) -> str:
         return f"not_null({self.column})"
 
 
 @dataclass(frozen=True)
-class AcceptedValues:
+class AcceptedValues(RowTest):
     column: str
     values: tuple = ()
 
-    def violations(self, df: DataFrame) -> DataFrame:
+    def condition(self) -> Column:
         # dbt compiles this to `where col not in (...)`; NULLs are not
         # violations of accepted_values (they're not_null's job).
         c = F.col(self.column)
-        return df.filter(c.isNotNull() & ~c.isin(list(self.values)))
+        return c.isNotNull() & ~c.isin(list(self.values))
 
     def describe(self) -> str:
         return f"accepted_values({self.column} in {list(self.values)})"
 
 
 @dataclass(frozen=True)
-class AcceptedRange:
+class AcceptedRange(RowTest):
     column: str
     min_value: float | None = None
     max_value: float | None = None
     inclusive: bool = True
 
-    def violations(self, df: DataFrame) -> DataFrame:
+    def condition(self) -> Column:
         c = F.col(self.column)
         cond: Column = F.lit(False)
         if self.min_value is not None:
             cond = cond | (c < self.min_value if self.inclusive else c <= self.min_value)
         if self.max_value is not None:
             cond = cond | (c > self.max_value if self.inclusive else c >= self.max_value)
-        return df.filter(c.isNotNull() & cond)
+        return c.isNotNull() & cond
 
     def describe(self) -> str:
         return f"accepted_range({self.column} in [{self.min_value}, {self.max_value}])"
 
 
 @dataclass(frozen=True)
-class Finite:
+class Finite(RowTest):
     """Floating-point hygiene gate: NaN and ±Infinity in a measure column.
 
     The engine's money/measure arithmetic uses the int64 micro-unit cast
@@ -100,9 +115,9 @@ class Finite:
 
     column: str
 
-    def violations(self, df: DataFrame) -> DataFrame:
+    def condition(self) -> Column:
         c = F.col(self.column)
-        return df.filter(c.isNotNull() & (F.isnan(c) | (F.abs(c) == float("inf"))))
+        return c.isNotNull() & (F.isnan(c) | (F.abs(c) == float("inf")))
 
     def describe(self) -> str:
         return f"finite({self.column})"
@@ -207,26 +222,18 @@ class TestResult:
     passed: bool  # True unless status == "error" (dbt: warn is still a pass)
     sample: list | None = None
     status: str = "pass"  # "pass" | "warn" | "error"
-    failures: int | None = None  # violation count (None when not computed)
+    failures: int = 0  # exact violation count, as dbt's run_results.json
 
 
 _DEFAULT_CONFIG = TestConfig()
 
 
 def _evaluate(
-    t, df: DataFrame, model_name: str, sample_limit: int, store_dir: str | None
+    t, df: DataFrame, n: int, model_name: str, sample_limit: int, store_dir: str | None
 ) -> TestResult:
+    """Route test ``t``'s violation count ``n`` through dbt's status rules."""
     cfg = t.config if isinstance(t, ConfiguredTest) else _DEFAULT_CONFIG
     v = t.violations(df)
-    default_thresholds = cfg.warn_if == ">0" and cfg.error_if == ">0"
-    if default_thresholds and not cfg.store_failures:
-        # fast path: limit(1)-style probe, short-circuits on first violation;
-        # the full count is only paid on failure (diagnostics)
-        if v.isEmpty():
-            return TestResult(model_name, t.describe(), True)
-        n = v.count()
-    else:
-        n = v.count()
     # dbt status routing: error_if fires only under severity=error; warn_if
     # can fire under either severity.
     if cfg.severity == "error" and eval_threshold(cfg.error_if, n):
@@ -238,10 +245,15 @@ def _evaluate(
     sample = None
     if status != "pass":
         sample = [r.asDict() for r in v.limit(sample_limit).collect()]
-    if cfg.store_failures and store_dir and (n or 0) > 0:
+    if cfg.store_failures and store_dir and n > 0:
         safe = re.sub(r"[^A-Za-z0-9_]+", "_", t.describe())[:120]
         v.write.mode("overwrite").parquet(os.path.join(store_dir, f"{model_name}__{safe}"))
     return TestResult(model_name, t.describe(), status != "error", sample, status, n)
+
+
+def _row_test(t) -> RowTest | None:
+    inner = t.test if isinstance(t, ConfiguredTest) else t
+    return inner if isinstance(inner, RowTest) else None
 
 
 def run_model_tests(
@@ -251,17 +263,20 @@ def run_model_tests(
     sample_limit: int = 5,
     store_dir: str | None = None,
 ) -> list[TestResult]:
-    return [_evaluate(t, df, model_name, sample_limit, store_dir) for t in tests]
-
-
-def run_tests(project, spark=None) -> list[TestResult]:
-    """Run every registered model's tests against its built relation."""
-    out: list[TestResult] = []
-    for name, model in project.models.items():
-        if not model.tests:
-            continue
-        df = project.relations.get(name)
-        if df is None:
-            continue
-        out.extend(run_model_tests(df, model.tests, name))
-    return out
+    """Count every test's violations — all row-level tests in one fused
+    aggregate, each set-level test by its own count — then route each
+    count through the test's config."""
+    fused = [_row_test(t) for t in tests]
+    conds = [F.count_if(r.condition()).alias(f"t{i}") for i, r in enumerate(fused) if r]
+    row = df.agg(*conds).collect()[0] if conds else None
+    return [
+        _evaluate(
+            t,
+            df,
+            row[f"t{i}"] if r else t.violations(df).count(),
+            model_name,
+            sample_limit,
+            store_dir,
+        )
+        for i, (t, r) in enumerate(zip(tests, fused))
+    ]

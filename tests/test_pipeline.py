@@ -467,6 +467,118 @@ def test_finite_test_flags_nan_and_inf(spark):
     assert built == Finite("price") and "finite(price)" == built.describe()
 
 
+def test_fused_counts_match_per_test_violations(spark, tmp_path):
+    """run_model_tests counts the row-level tests inside one fused aggregate;
+    every count, status and sample must equal what the test's own
+    violations frame gives, on a frame holding NULL, NaN, ±inf, out-of-range
+    and unaccepted values, with a set-level test and config edges mixed in."""
+    import os
+
+    from dbt_trill_shop_spark.core.testing import (
+        AcceptedRange,
+        AcceptedValues,
+        ConfiguredTest,
+        Finite,
+        NotNull,
+        TestConfig,
+        Unique,
+        run_model_tests,
+    )
+
+    inf, nan = float("inf"), float("nan")
+    df = spark.createDataFrame(
+        [(1, 1.0, "a", 1), (2, None, "b", 1), (3, nan, "zz", 2), (4, inf, None, 3),
+         (5, -inf, "a", 4), (6, 500.0, "q", 4), (7, -3.0, "b", None)],
+        "id long, x double, s string, k long",
+    )
+    store = str(tmp_path / "store")
+    cases = [
+        (NotNull("x"), "error"),
+        (NotNull("s"), "error"),
+        (NotNull("id"), "pass"),
+        (AcceptedValues("s", ("a", "b")), "error"),
+        (AcceptedRange("x", min_value=0, max_value=100), "error"),
+        (AcceptedRange("x", min_value=-3, max_value=1, inclusive=False), "error"),
+        (AcceptedRange("id", min_value=1), "pass"),
+        (Finite("x"), "error"),
+        (Unique("k"), "error"),
+        # warn_if '>=0' fires on a clean column
+        (ConfiguredTest(NotNull("id"), TestConfig(warn_if=">=0")), "warn"),
+        # 2 violations: error_if '>5' not met, warn_if '>0' met
+        (ConfiguredTest(AcceptedValues("s", ("a", "b")), TestConfig(error_if=">5")), "warn"),
+        (ConfiguredTest(Finite("x"), TestConfig(severity="warn", store_failures=True)), "warn"),
+    ]
+    results = run_model_tests(df, [t for t, _ in cases], "m", sample_limit=10, store_dir=store)
+
+    def rows(rs):
+        return sorted(repr(sorted(r.items())) for r in rs)
+
+    for (t, status), r in zip(cases, results):
+        v = t.violations(df)
+        assert r.test == t.describe()
+        assert r.failures == v.count(), (r.test, r.failures)
+        assert r.status == status and r.passed == (status != "error"), r.test
+        if status == "pass":
+            assert r.sample is None
+        else:  # every case has at most sample_limit=10 violations
+            assert rows(r.sample) == rows(x.asDict() for x in v.collect()), r.test
+    assert [r.failures for r in results[:9]] == [1, 1, 0, 2, 5, 6, 0, 3, 2]
+
+    # store_failures writes exactly the violating rows, and only for that test
+    [stored] = os.listdir(store)
+    ids = spark.read.parquet(os.path.join(store, stored)).select("id").collect()
+    assert sorted(x["id"] for x in ids) == [3, 4, 5]
+
+
+def test_row_level_tests_share_one_aggregate_job(spark):
+    """Any number of passing row-level tests on one relation costs exactly
+    the Spark jobs of one aggregate over it, not one probe per test."""
+    import uuid
+
+    from dbt_trill_shop_spark.core.testing import (
+        AcceptedRange,
+        AcceptedValues,
+        ConfiguredTest,
+        Finite,
+        NotNull,
+        TestConfig,
+        run_model_tests,
+    )
+    from pyspark.sql import functions as F
+
+    df = spark.range(0, 1000, numPartitions=4).selectExpr(
+        "id", "id % 7 AS k", "CAST(id AS DOUBLE) AS x", "CAST(id % 3 AS STRING) AS s"
+    )
+    tests = [
+        NotNull("id"),
+        NotNull("k"),
+        NotNull("x"),
+        NotNull("s"),
+        AcceptedValues("s", ("0", "1", "2")),
+        AcceptedRange("k", min_value=0, max_value=6),
+        AcceptedRange("x", min_value=0),
+        Finite("x"),
+        ConfiguredTest(NotNull("s"), TestConfig(severity="warn")),
+    ]
+    sc = spark.sparkContext
+
+    def jobs(fn):
+        group = f"job-budget-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the tracker
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    results, n_tests = jobs(lambda: run_model_tests(df, tests, "m"))
+    _, n_agg = jobs(lambda: df.agg(F.count_if(F.col("id").isNull())).collect())
+    assert n_agg >= 1 and n_tests == n_agg, (n_tests, n_agg)
+    assert all(r.status == "pass" and r.failures == 0 for r in results)
+
+
 def test_var_substitution_in_sql_models(spark, sf_dir):
     """{{ var('name', default) }}: project vars flow into SQL-file models;
     in-text defaults apply when the var is unset (dbt --vars)."""
@@ -590,6 +702,8 @@ def test_write_artifacts(built_project, tmp_path):
     assert all(e["execution_time"] >= 0 for e in model_entries)
     assert len(test_entries) == 68
     assert all(e["status"] == "pass" for e in test_entries)
+    # dbt records the exact violation count, 0 for a passing test
+    assert all(e["failures"] == 0 for e in test_entries)
 
 
 def test_source_freshness(spark, sf_dir):
