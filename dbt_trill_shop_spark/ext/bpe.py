@@ -252,7 +252,8 @@ def _with_viterbi(words: DataFrame, costs: dict, piece_max_len: int) -> DataFram
     array) and ``_ps`` (the segmentation pieces).  The cost table rides as
     a ``map(...)`` literal (vocab-bounded — the kmeans-centroid-broadcast
     idiom), so the whole DP runs inside one whole-stage-codegen expression
-    per word: no joins, no shuffles.
+    per word: no joins, no shuffles.  Over a local relation (the EM loop's
+    word table) Catalyst folds the same projection on the driver.
 
     The map is built as ONE SQL string parsed JVM-side rather than
     ``create_map`` over 2·|vocab| ``F.lit`` Columns: each ``lit`` is a py4j
@@ -271,15 +272,23 @@ def _with_viterbi(words: DataFrame, costs: dict, piece_max_len: int) -> DataFram
     )
 
 
-def _viterbi_usage(words: DataFrame, costs: dict, piece_max_len: int) -> DataFrame:
+def _freq_by_piece(rows, col: str) -> dict[str, int]:
+    """Exact per-piece ``Σ freq`` over collected rows whose ``col`` is an
+    array of pieces (one entry per occurrence)."""
+    out: dict[str, int] = {}
+    for r in rows:
+        for p in r[col]:
+            out[p] = out.get(p, 0) + r["freq"]
+    return out
+
+
+def _piece_usage(words: DataFrame, costs: dict, piece_max_len: int) -> dict[str, int]:
     """E-step: per-word Viterbi segmentation under the current piece costs,
-    rolled up to per-piece usage counts (weighted by word frequency)."""
-    return (
-        _with_viterbi(words, costs, piece_max_len)
-        .select("freq", F.explode("_ps").alias("piece"))
-        .groupBy("piece")
-        .agg(F.sum("freq").cast("bigint").alias("usage"))
-    )
+    summed to per-piece usage counts (weighted by word frequency).
+    ``words`` is the local word relation, so the DP projection folds on
+    the driver (ConvertToLocalRelation) and the collect launches no job."""
+    rows = _with_viterbi(words, costs, piece_max_len).select("freq", "_ps").collect()
+    return _freq_by_piece(rows, "_ps")
 
 
 def unigram_lm_em(
@@ -308,10 +317,11 @@ def unigram_lm_em(
     identical segmentations and identical final tables.
 
     Scale shape: ONE corpus-sized pass (the word-frequency groupBy,
-    map-side combined); everything after is vocab-bounded — candidate
-    counts are (words × L × P) integer rows, the EM loop's driver
-    collects are ≤ vocab-sized (the bpe_merges / kmeans_refine idiom),
-    and the E-step is a single codegen stage over the word table."""
+    map-side combined, collected once as ≤ ``max_vocab`` rows); then
+    the EM loop folds on the driver with no jobs — candidate counts,
+    the Viterbi E-steps and the M-steps are projections over that local
+    word relation plus exact Python sums (the bpe_merges idiom; see
+    :func:`_unigram_em_costs`)."""
     spark = docs.sparkSession
     out_schema = "piece string, usage bigint, cost_micro bigint"
     costs, final_rows = _unigram_em_costs(
@@ -382,53 +392,47 @@ def _unigram_em_costs(
     M-step's add-one smoothing runs over the SURVIVORS only, so costs
     renormalize to the pruned inventory.  ``None`` (default) keeps the
     full seed vocabulary every round — the original behavior, unchanged
-    for the staged x_unigram_lm_em / x_unigram_fertility paths."""
+    for the staged x_unigram_lm_em / x_unigram_fertility paths.
+
+    Scale shape: the word-frequency collect (with the ``word_max_len``
+    cut) is the ONE corpus-sized pass and the only Spark jobs; its
+    ≤ ``max_vocab`` rows come back as a local ``VALUES`` relation.  Every
+    later step is a projection over that relation — the candidate
+    substrings, each E-step's Viterbi DP, each M-step's ln/round — which
+    Catalyst's ConvertToLocalRelation evaluates on the driver, so the
+    loop launches no job; per-piece sums, the top-``n_pieces`` cut and
+    the normalizers are exact Python ints.  The DP stays the one SQL
+    expression :func:`unigram_fertility` also runs corpus-wide."""
     spark = docs.sparkSession
-    words = (
+    word_rows = (
         word_frequencies(docs, max_vocab, text_col)
         .filter(F.length("w") <= word_max_len)
-        .localCheckpoint(eager=True)
+        .collect()
     )
-    P, L = int(piece_max_len), int(word_max_len)
+    if not word_rows:  # degenerate corpus: no words survive the cut
+        return {}, []
+    words = values_relation(spark, word_rows, "w string, freq long")
+    P = int(piece_max_len)
     subs = words.select(
         "freq",
-        F.explode(
-            F.expr(
-                f"flatten(transform(sequence(1, length(w)), "
-                f"i -> transform(sequence(1, least({P}, length(w) - i + 1)), "
-                f"l -> substring(w, i, l))))"
-            )
-        ).alias("piece"),
-    )
-    cand = subs.groupBy("piece").agg(F.sum("freq").cast("bigint").alias("cnt"))
-    topv = cand.orderBy(F.desc("cnt"), F.asc("piece")).limit(int(n_pieces))
-    singles = cand.filter(F.length("piece") == 1)
-    vocab0 = (
-        topv.unionByName(singles).groupBy("piece").agg(F.max("cnt").alias("cnt"))
-    )
-    # The normalizer ``tot`` is an exact int64 sum, so collect the
-    # vocab-bounded rows once and sum in Python instead of
-    # crossJoin(broadcast(agg)): the broadcast exchange is a whole extra
-    # job + broadcast build per normalization, ~0.5-1.5 s of machinery for
-    # a <=|vocab|-row relation (measured; the arithmetic itself is free).
-    # ln/round stay Spark expressions over a LOCAL relation — Catalyst
-    # constant-folds them driver-side with the identical Log/Round
-    # semantics, so every cost value is bit-equal to the former
-    # distributed evaluation (the cross-engine determinism contract).
-    vocab_rows = vocab0.collect()
-    if not vocab_rows:  # degenerate corpus: no words survive the cut
-        return {}, []
-    cost_rows = _norm_costs(
-        spark,
-        sorted((r["piece"], int(r["cnt"]), int(r["cnt"])) for r in vocab_rows),
-    )
+        F.expr(
+            f"flatten(transform(sequence(1, length(w)), "
+            f"i -> transform(sequence(1, least({P}, length(w) - i + 1)), "
+            f"l -> substring(w, i, l))))"
+        ).alias("subs"),
+    ).collect()
+    cand = _freq_by_piece(subs, "subs")
+    # seed vocabulary: top n_pieces by (cnt desc, piece asc) plus every
+    # single-char piece (pieces are [a-z]+, so Python's order is Spark's)
+    ranked = sorted(cand, key=lambda p: (-cand[p], p))
+    seed = set(ranked[: int(n_pieces)]) | {p for p in cand if len(p) == 1}
+    # ln/round stay Spark expressions over a local relation (see
+    # _norm_costs), so every cost is bit-equal to a distributed evaluation
+    cost_rows = _norm_costs(spark, sorted((p, cand[p], cand[p]) for p in seed))
     costs = {r["piece"]: int(r["cost"]) for r in cost_rows}
     final_rows: list = []
     for _ in range(int(em_rounds)):
-        usage = {
-            r["piece"]: int(r["usage"])
-            for r in _viterbi_usage(words, costs, P).collect()
-        }
+        usage = _piece_usage(words, costs, P)
         live = sorted(costs)
         if keep_pieces is not None:
             ranked = sorted(live, key=lambda p: (-usage.get(p, 0), p))

@@ -2578,13 +2578,15 @@ _CHANGED_IN_ROUND = {
         "x_dup_cluster_sizes", "x_dedup_quality_canonical",
         "x_coverage_select", "q_txn_merge_cdc", "q_txn_clone",
         "x_cdf_reembed", "q_txn_ndv_stats", "q_txn_sketch_overlap",
-        "s_stream_attribution_outer", "q_txn_partitioned_prune",
-        "q_txn_dynamic_overwrite", "q_txn_partition_stats",
+        "q_txn_partitioned_prune", "q_txn_dynamic_overwrite",
+        "q_txn_partition_stats",
     ), 14),
     **dict.fromkeys((
         "x_knn_pagerank", "x_label_propagation", "q_theilsen_trend",
         "q_ks_test", "q_mannwhitney", "x_length_bias", "q_txn_identity",
-        "q_txn_zorder_box", "q_txn_cluster_prune",
+        "q_txn_zorder_box", "q_txn_cluster_prune", "x_unigram_lm_em",
+        "x_unigram_fertility", "x_unigram_pruned",
+        "s_stream_attribution_outer",
     ), 15),
 }
 

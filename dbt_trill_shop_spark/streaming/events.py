@@ -17,6 +17,7 @@ the stream rollup omits unique_users (the batch twin provides it).
 from __future__ import annotations
 
 import contextlib
+import math
 import threading
 import uuid
 
@@ -157,7 +158,8 @@ def run_stream_to_memory(
     so overlapping set/restore pairs cannot leave the session conf on the
     drain value (the plain save/restore had an ABA race).  Overlapping
     drains that request DIFFERENT partition counts share whichever count the
-    first drain set (all in-repo callers pass _DRAIN_SHUFFLE_PARTITIONS)."""
+    first drain set; that changes only how state is partitioned, never a
+    drain's result."""
     spark = df.sparkSession
     restore = False
     if shuffle_partitions is not None:
@@ -221,6 +223,29 @@ def run_stream_to_memory(
 # Bounded state-store count for the availableNow demo drains (see
 # run_stream_to_memory docstring for the sizing rationale / measurements).
 _DRAIN_SHUFFLE_PARTITIONS = 8
+
+
+def _drain_partitions(spark: SparkSession, path: str) -> int:
+    """State partition count for a drain over the staged input at ``path``:
+    ``ceil(bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes)``,
+    clamped to ``[1, defaultParallelism]``.
+
+    Streaming micro-batches run without AQE, and a stateful operator's
+    partition count is fixed when its checkpoint starts, so AQE can never
+    coalesce a drain's state partitions; a bounded drain that staged its
+    own input knows its exact size and picks the count up front the way
+    AQE would for the same bytes."""
+    nbytes = sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(path)
+        for f in files
+    )
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    return max(
+        1, min(spark.sparkContext.defaultParallelism, math.ceil(nbytes / advisory))
+    )
 
 
 def stream_weekly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -547,7 +572,14 @@ def stream_purchase_attribution_outer(
     the SAME files in the SAME micro-batches, neither side can run ahead
     of the other's data, so max and min are semantically identical here —
     no real row can be late-dropped — and max actually propagates the
-    tick.  Asymmetric-source production joins should keep min."""
+    tick.  Asymmetric-source production joins should keep min.
+
+    State partitions: the drain sizes them to its staged input
+    (:func:`_drain_partitions` — one partition per advisory AQE partition
+    size of bytes), not the fixed ``_DRAIN_SHUFFLE_PARTITIONS``.  A
+    stream-stream join opens four state stores per partition (two per
+    side) in every micro-batch, so the fixed 8 partitions cost 32 store
+    instances per batch for the few thousand rows of sf0.01."""
     import shutil
     import tempfile
     import time as _time
@@ -690,7 +722,7 @@ def stream_purchase_attribution_outer(
             return run_stream_to_memory(
                 joined,
                 output_mode="append",
-                shuffle_partitions=_DRAIN_SHUFFLE_PARTITIONS,
+                shuffle_partitions=_drain_partitions(spark, base),
             )
     finally:
         # the drain has fully materialized into the memory sink by the
