@@ -2,15 +2,20 @@
 
 - exact dedup: hash-groupBy on a content fingerprint (md5).  At 100 TB the
   groupBy shuffles only (fingerprint, doc_id) — 48 bytes/row — never the text.
-- SimHash: 64-bit fingerprint from token hashes; near-dups = pairs whose
-  fingerprints match on at least one of 4 16-bit bands (Hamming<=3-ish
-  recall), joined band-wise — again no cross join.
 - exact n-gram Jaccard / asymmetric containment: common-shingle joins
   (documents only meet if they share a shingle), shingle relation
   checkpointed once.
-- near-dup (banded MinHash): word-shingle signatures -> band self-join for
-  candidate pairs -> exact-Jaccard verification of candidates only
-  (false-positive-free, no O(n^2) cross join).
+- banded near-dup, MinHash (xxhash64 or md5 minwise order) and SimHash
+  (xxhash64 64-bit or md5 60-bit fingerprints), built from private cores
+  that take only the hash and the bit width:
+  ``_band_rows`` (the one long-form (id, bidx, bk) band explode, and the
+  one place a band count is validated), ``_band_pairs`` (the one
+  (bidx, bk) self-join, an optional ``keep`` step before the pair
+  distinct), ``_md5_minhash_sigs`` (the md5 minwise signatures),
+  ``_simhash_pairs`` (banding plus the Hamming check) and
+  ``_shingle_overlap``/``_verify_jaccard`` (the one exact verify:
+  broadcast per-doc shingle-hash sets, integer size-ratio prefilter,
+  ``array_intersect`` per candidate pair).  No O(n^2) cross join.
 - connected components over the pair graph -> dedup groups; canonical-doc
   selection per group; benchmark decontamination (broadcast shingle
   anti-join); cross-source overlap reporting.
@@ -242,64 +247,120 @@ def simhash_near_duplicates(
     bands: int = 4,
     max_hamming: int | None = None,
 ) -> DataFrame:
-    """Candidate near-dup pairs whose SimHash matches on >=1 of ``bands``
-    bands — a self-join per band on the band value (shuffle on a short
-    key), unioned and de-duplicated.  Verify candidates downstream with exact
-    Hamming distance (cheap: popcount of xor).
+    """Candidate near-dup pairs (id_a, id_b, hamming) whose SimHash
+    matches on >=1 of ``bands`` bands — one long-form (bidx, bk) self-join
+    (shuffle on a short key), de-duplicated; ``hamming`` is the bigint
+    popcount of the fingerprints' xor.
 
-    ``max_hamming`` applies the popcount filter INSIDE each band join,
-    before the union/distinct — with narrow bands (8 bands = 8-bit keys)
-    random collisions otherwise flood the candidate relation (5.1M pairs at
-    5k docs observed; hamming<=12 keeps the true near-dups and drops the
-    noise before it ever rides the distinct shuffle)."""
+    ``max_hamming`` applies the popcount filter on the band-join rows,
+    before the distinct — with narrow bands (8 bands = 8-bit keys) random
+    collisions otherwise flood the candidate relation (5.1M pairs at 5k
+    docs observed; hamming<=12 keeps the true near-dups and drops the noise
+    before it ever rides the distinct shuffle)."""
     sim = simhash(docs, text_col, id_col)
-    # the fingerprint relation feeds both sides of the band self-join —
-    # materialize once or the 64-agg computation re-runs per side
-    sim = sim.localCheckpoint(eager=True)
-    width = 64 // bands
-    mask = (1 << width) - 1
-    # LONG-FORM banding (the minhash_banded_candidates recipe): explode the
-    # ``bands`` band values to (id, bidx, band) rows and run ONE self-join
-    # keyed on (bidx, band) instead of ``bands`` separate joins unioned —
-    # identical pair set (a pair collides on band b iff it matches at that
-    # index either way), same shuffled bytes (bands·N short rows once vs N
-    # rows bands times), but one exchange pair + one distinct instead of
-    # 2·bands exchanges and a bands-branch union feeding the distinct.
-    banded = sim.select(
+    return _simhash_pairs(
+        sim.select(id_col, F.col("simhash").alias("fp")), id_col, 64, bands,
+        max_hamming,
+    )
+
+
+def _band_rows(
+    sigs: DataFrame, id_col: str, n: int, bands: int, band_key, carry=()
+) -> DataFrame:
+    """LONG-FORM banding, the one band explode of every sketch family:
+    split an ``n``-component sketch (MinHash values or fingerprint bits)
+    into ``bands`` bands of ``r = n // bands`` components, key band b by
+    ``band_key(b, r)``, and return one (id, *carry, bidx, bk) row per band.
+    One (bidx, bk) self-join over these rows (:func:`_band_pairs`) replaces
+    ``bands`` separate joins unioned: the same pair set (a pair collides on
+    band b iff it matches at that index either way) and the same shuffled
+    bytes, but one exchange pair and one distinct instead of 2·bands
+    exchanges and a bands-branch union.
+
+    A band needs at least one component: ``bands`` outside ``[1, n]``
+    would key every band on nothing (r = 0), so every document would
+    collide with every other, silently and quadratically.  It raises
+    instead."""
+    if not 1 <= bands <= n:
+        raise ValueError(
+            f"bands={bands} must lie in [1, {n}] for a sketch of {n} "
+            "components (MinHash num_hashes or SimHash bits): r = "
+            f"{n} // bands rows per band must be at least 1"
+        )
+    r = n // bands
+    return sigs.select(
         F.col(id_col),
-        F.col("simhash"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("simhash"), b * width).bitwiseAND(
-                        F.lit(mask)
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bidx", "band"),
+        *carry,
+        F.posexplode(F.array(*[band_key(b, r) for b in range(bands)])).alias(
+            "bidx", "bk"
+        ),
     )
-    left = banded.select(
-        F.col(id_col).alias("id_a"), F.col("simhash").alias("sim_a"),
-        "bidx", "band",
-    )
-    right = banded.select(
-        F.col(id_col).alias("id_b"), F.col("simhash").alias("sim_b"),
-        "bidx", "band",
-    )
-    pairs = left.join(right, ["bidx", "band"]).filter(
+
+
+def _band_pairs(
+    banded: DataFrame, id_col: str, min_matches: int = 1, keep=None
+) -> DataFrame:
+    """The one (bidx, bk) self-join over :func:`_band_rows` output: pairs
+    (id_a < id_b) colliding on at least ``min_matches`` bands.  Carried
+    columns ride both sides as ``<col>_a``/``<col>_b``.
+
+    ``keep`` maps the raw per-band pair rows to the rows worth keeping
+    (default: the id pair); it runs BEFORE the pair distinct, so a cheap
+    per-row check like SimHash's Hamming filter shrinks the exchange the
+    distinct needs instead of riding it.  ``min_matches > 1`` replaces the
+    distinct with a per-pair band count (:func:`minhash_banded_candidates`
+    says why), which rides the same aggregate."""
+    carry = [c for c in banded.columns if c not in (id_col, "bidx", "bk")]
+
+    def side(s: str) -> DataFrame:
+        return banded.select(
+            F.col(id_col).alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+            "bidx", "bk",
+        )
+
+    pairs = side("a").join(side("b"), ["bidx", "bk"]).filter(
         F.col("id_a") < F.col("id_b")
     )
-    if max_hamming is not None:
-        pairs = pairs.filter(
-            F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))) <= max_hamming
-        )
+    pairs = keep(pairs) if keep is not None else pairs.select("id_a", "id_b")
+    if min_matches <= 1:
+        return pairs.distinct()
     return (
-        pairs.select("id_a", "id_b", "sim_a", "sim_b")
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))))
-        .drop("sim_a", "sim_b")
+        pairs.groupBy(*pairs.columns)
+        .agg(F.count(F.lit(1)).alias("_m"))
+        .filter(F.col("_m") >= min_matches)
+        .drop("_m")
     )
+
+
+def _simhash_pairs(
+    fps: DataFrame, id_col: str, bits: int, bands: int, max_hamming: int | None
+) -> DataFrame:
+    """(id_a, id_b, hamming) for the ``fp`` fingerprints (``bits`` wide)
+    that agree on at least one of ``bands`` bit bands, with the bigint
+    Hamming distance at most ``max_hamming`` when one is given — the one
+    SimHash stack under both hash functions.  The fingerprint rides the
+    band rows, so the XOR+bit_count check is a per-row op on the join
+    output and runs before the pair distinct."""
+
+    def band_key(b: int, w: int):
+        # a 64-bit band (bands=1 over 64 bits) is the whole signed long
+        mask = (1 << w) - 1 if w < 64 else -1
+        return F.shiftright(F.col("fp"), b * w).bitwiseAND(F.lit(mask))
+
+    # the band rows feed both sides of the self-join — materialize once or
+    # the fingerprint aggregation re-runs per side
+    banded = _band_rows(fps, id_col, bits, bands, band_key, carry=("fp",))
+    banded = banded.localCheckpoint(eager=True)
+
+    def keep(pairs: DataFrame) -> DataFrame:
+        ham = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))).cast("bigint")
+        pairs = pairs.select("id_a", "id_b", ham.alias("hamming"))
+        if max_hamming is None:
+            return pairs
+        return pairs.filter(F.col("hamming") <= max_hamming)
+
+    return _band_pairs(banded, id_col, keep=keep)
 
 
 def simhash_neardup_verified(
@@ -310,7 +371,6 @@ def simhash_neardup_verified(
     shingle_len: int = 3,
     jaccard_threshold: float = 0.85,
     max_hamming: int = 12,
-    broadcast_sets: bool = True,
 ) -> DataFrame:
     """SimHash-banded candidates -> EXACT n-gram Jaccard verification — the
     production near-dup shape (candidates cheap and hash-based, the verify
@@ -330,73 +390,96 @@ def simhash_neardup_verified(
     exact filter keeps, and output == brute-force Jaccard >= threshold.
 
     ``max_hamming=12`` (3 above the observed true-pair maximum) trims the
-    8-bit-band collision noise inside each band join.  On template-heavy
+    8-bit-band collision noise before the pair distinct.  On template-heavy
     corpora the surviving candidate set is still large (synthetic docs share
-    vocabulary, so fingerprints correlate: ~950k pairs at 5k docs), so the
-    verify scores each CANDIDATE PAIR directly — per-doc shingle-hash sets
-    ride a broadcast-size relation (|docs| rows of ~45 int64s) joined onto
-    the pair list, jaccard = array_intersect per pair — instead of the
-    common-shingle join, which would regenerate every template collision as
-    pair rows all over again.  At corpus scale the set relation joins by id
-    (hash shuffle) rather than broadcasting; text never rides an exchange
-    either way."""
+    vocabulary, so fingerprints correlate: ~950k pairs at 5k docs), which is
+    what the pair-scoring verify (:func:`_verify_jaccard`) is shaped for."""
     cands = simhash_near_duplicates(
         docs, text_col, id_col, bands, max_hamming=max_hamming
     ).select("id_a", "id_b")
+    return _verify_jaccard(
+        cands, docs, text_col, id_col, shingle_len, jaccard_threshold
+    )
+
+
+def _shingle_overlap(
+    pairs: DataFrame,
+    docs: DataFrame,
+    text_col: str,
+    id_col: str,
+    shingle_len: int,
+    threshold: float = 0.0,
+) -> DataFrame:
+    """(id_a, id_b, _na, _nb, _ni) per candidate pair: the bigint sizes of
+    both documents' distinct shingle sets and of their intersection — the
+    one exact-verify core of the banded near-dup pipelines.
+
+    It scores each CANDIDATE PAIR directly: per-doc shingle-hash sets ride
+    a broadcast relation (|docs| rows of ~45 int64s) joined onto the pair
+    list, and the intersection is one ``array_intersect`` per pair.  A
+    common-shingle join would instead regenerate every template collision
+    as pair rows (its fan-out is Σ_shingle df²), and a per-pair probe join
+    would shuffle |pairs| × |shingles| rows; here the pair relation never
+    shuffles and text never rides an exchange.  Set elements are xxhash64
+    of the shingle (collision odds ~ |shingles|² / 2^64, as in
+    :func:`ngram_jaccard_pairs`).
+
+    Pairs whose set sizes cannot reach Jaccard ``threshold`` drop before
+    the intersect: J = |∩|/|∪| <= min(na,nb)/max(na,nb), an integer
+    comparison that skips the O(na+nb) intersect for the bulk of the
+    template-collision candidates.  Integer math at the final filter's
+    1e-9 granularity, floored: a float `min >= t*max` would drop a
+    boundary pair whenever t's double rounds UP (t=0.9, min/max = 9/10
+    passes the rounded-J filter but 9 < 0.9000…0002*10); flooring the
+    scaled threshold keeps the bound conservative — the exact J filter
+    still decides, so no false negatives ever."""
     sets = (
         _distinct_shingle_rel(docs, text_col, id_col, shingle_len)
         .groupBy(id_col)
         .agg(F.collect_set(F.xxhash64("s")).alias("_sh"))
-        .select(id_col, "_sh", F.array_size("_sh").alias("_n"))
+        .select(id_col, "_sh", F.array_size("_sh").cast("bigint").alias("_n"))
     )
-    # broadcast_sets=False at corpus scale: the set relation then joins by id
-    # (hash shuffle of int64 arrays); the eval default pins the broadcast so
-    # the pair relation never shuffles at all
-    _hint = F.broadcast if broadcast_sets else (lambda df: df)
+
+    def side(s: str) -> DataFrame:
+        return F.broadcast(
+            sets.select(
+                F.col(id_col).alias(f"id_{s}"),
+                F.col("_sh").alias(f"_s{s}"),
+                F.col("_n").alias(f"_n{s}"),
+            )
+        )
+
     return (
-        cands.join(
-            _hint(
-                sets.select(
-                    F.col(id_col).alias("id_a"),
-                    F.col("_sh").alias("_sa"),
-                    F.col("_n").alias("_na"),
-                )
-            ),
-            "id_a",
-        )
-        .join(
-            _hint(
-                sets.select(
-                    F.col(id_col).alias("id_b"),
-                    F.col("_sh").alias("_sb"),
-                    F.col("_n").alias("_nb"),
-                )
-            ),
-            "id_b",
-        )
-        # exact length prefilter: J = |∩|/|∪| <= min(na,nb)/max(na,nb), so a
-        # pair can only reach the threshold when its set sizes are within the
-        # ratio — an integer comparison that skips the O(na+nb) intersect for
-        # the bulk of the template-collision candidates.  Integer math at the
-        # final filter's 1e-9 granularity, floored: a float `min >= t*max`
-        # would drop a boundary pair whenever t's double rounds UP (t=0.9,
-        # min/max = 9/10 passes the rounded-J filter but 9 < 0.9000…0002*10);
-        # flooring the scaled threshold keeps the bound conservative — the
-        # exact J filter below still decides, so no false negatives ever
+        pairs.join(side("a"), "id_a")
+        .join(side("b"), "id_b")
         .filter(
-            F.least("_na", "_nb").cast("bigint") * F.lit(1_000_000_000)
-            >= F.lit(int(jaccard_threshold * 1e9))
-            * F.greatest("_na", "_nb").cast("bigint")
+            F.least("_na", "_nb") * F.lit(1_000_000_000)
+            >= F.lit(int(threshold * 1e9)) * F.greatest("_na", "_nb")
         )
-        .withColumn("_ni", F.array_size(F.array_intersect("_sa", "_sb")))
         .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("_ni") / (F.col("_na") + F.col("_nb") - F.col("_ni")), 9
-            ).alias("jaccard"),
+            "id_a", "id_b", "_na", "_nb",
+            F.array_size(F.array_intersect("_sa", "_sb")).cast("bigint").alias("_ni"),
         )
-        .filter(F.col("jaccard") >= jaccard_threshold)
+    )
+
+
+def _verify_jaccard(
+    pairs: DataFrame,
+    docs: DataFrame,
+    text_col: str,
+    id_col: str,
+    shingle_len: int,
+    threshold: float,
+) -> DataFrame:
+    """(id_a, id_b, jaccard) for the candidate pairs whose EXACT n-gram
+    Jaccard (rounded to 9 dp, as :func:`ngram_jaccard_pairs`) reaches
+    ``threshold`` — the verify stage of every banded near-dup pipeline,
+    scored by :func:`_shingle_overlap`."""
+    ni, na, nb = F.col("_ni"), F.col("_na"), F.col("_nb")
+    return (
+        _shingle_overlap(pairs, docs, text_col, id_col, shingle_len, threshold)
+        .select("id_a", "id_b", F.round(ni / (na + nb - ni), 9).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
     )
 
 
@@ -428,45 +511,26 @@ def minhash_banded_candidates(
     min_band_matches: int = 1,
 ) -> DataFrame:
     """LSH banding over native signatures: hash each band of r = n/b minhash
-    values to one 64-bit band key, self-join per band on (band_idx, key),
-    union + distinct.  A pair collides iff some band matches — the standard
-    (b, r) S-curve; with b=4, r=4 the 50%-collision point is ~J=0.7.
-    Join key is 12 bytes; candidate pairs then need exact verification.
+    values to one 64-bit band key, one long-form self-join on
+    (band_idx, key), distinct.  A pair collides iff some band matches — the
+    standard (b, r) S-curve; with b=4, r=4 the 50%-collision point is
+    ~J=0.7.  Join key is 12 bytes; candidate pairs then need exact
+    verification.
 
     ``min_band_matches`` raises the collision bar from >=1 matching band to
     >=m — with r=1 the match count IS the MinHash similarity estimate
     (m/bands ~ J), so m>=4 of 16 keeps every J >= ~0.5 pair (binomial tail
     below 1e-10) while dropping the single-hash random collisions that
-    otherwise make every doc a verify candidate.  Costs nothing: the count
-    rides the same groupBy that deduplicated the union."""
-    r = num_hashes // bands
-    # long form (id, band_idx, band_key): ONE self-join keyed on
-    # (band_idx, key) replaces bands separate joins, and the signature
-    # pipeline (explode + num_hashes aggs) runs once instead of once per
-    # join side per band — the banded relation is tiny (bands rows of 16
-    # bytes per doc), so materializing it is cheap insurance
-    banded = sigs.select(
-        F.col(id_col),
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(*[F.col(f"mh{b * r + j}") for j in range(r)])
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bidx", "bk"),
-    ).localCheckpoint(eager=True)
-    left = banded.select(F.col(id_col).alias("id_a"), "bidx", "bk")
-    right = banded.select(F.col(id_col).alias("id_b"), "bidx", "bk")
-    matched = left.join(right, ["bidx", "bk"]).filter(F.col("id_a") < F.col("id_b"))
-    if min_band_matches <= 1:
-        return matched.select("id_a", "id_b").distinct()
-    return (
-        matched.groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("_m"))
-        .filter(F.col("_m") >= min_band_matches)
-        .select("id_a", "id_b")
+    otherwise make every doc a verify candidate."""
+    banded = _band_rows(
+        sigs, id_col, num_hashes, bands,
+        lambda b, r: F.xxhash64(*[F.col(f"mh{b * r + j}") for j in range(r)]),
     )
+    # the signature pipeline (explode + num_hashes aggs) would otherwise run
+    # once per join side — the banded relation is tiny (bands rows of 16
+    # bytes per doc), so materializing it is cheap insurance
+    banded = banded.localCheckpoint(eager=True)
+    return _band_pairs(banded, id_col, min_band_matches)
 
 
 def neardup_minhash_native(
@@ -483,25 +547,15 @@ def neardup_minhash_native(
     banded-MinHash candidate generation -> EXACT n-gram Jaccard verification
     of only the candidate pairs.  Output: (id_a, id_b, jaccard) above
     threshold.  False-positive-free (exact verify); false negatives bounded
-    by the (b, r) S-curve.  All JVM-side Column ops; the exact verify joins
-    shingles only for candidate docs (left_semi prefilter)."""
+    by the (b, r) S-curve.  All JVM-side Column ops; the verify scores the
+    candidate pairs only (:func:`_verify_jaccard`)."""
     sigs = minhash_signatures(docs, text_col, id_col, num_hashes, shingle_len)
     cands = minhash_banded_candidates(
         sigs, id_col, num_hashes, bands, min_band_matches
     )
-    # candidate pairs feed BOTH sides of the id union and the final verify
-    # join — materialize once or the signature pipeline runs 3x
-    cands = cands.localCheckpoint(eager=True)
-    cand_ids = (
-        cands.select(F.col("id_a").alias(id_col))
-        .union(cands.select(F.col("id_b").alias(id_col)))
-        .distinct()
+    return _verify_jaccard(
+        cands, docs, text_col, id_col, shingle_len, jaccard_threshold
     )
-    docs_sub = docs.join(cand_ids, id_col, "left_semi")
-    exact = ngram_jaccard_pairs(
-        docs_sub, text_col, id_col, shingle_len, threshold=jaccard_threshold
-    )
-    return exact.join(cands, ["id_a", "id_b"], "inner")
 
 
 def ngram_jaccard_pairs_filtered(
@@ -1234,6 +1288,15 @@ def minhash_band_keys_md5(
     this VERIFICATION twin, the xxhash64 production path keeps text off
     every exchange.
     """
+    sigs = _md5_minhash_sigs(docs, text_col, id_col, num_hashes, shingle_len)
+    return _band_rows(sigs, id_col, num_hashes, bands, _md5_band_key)
+
+
+def _md5_minhash_sigs(
+    docs: DataFrame, text_col: str, id_col: str, num_hashes: int, shingle_len: int
+) -> DataFrame:
+    """(id, mh0 … mh{num_hashes-1}): the md5 minwise signatures of
+    :func:`minhash_band_keys_md5`, over docs repartitioned by id."""
     _par = docs.sparkSession.sparkContext.defaultParallelism
     sh = _distinct_shingle_rel(
         docs.repartition(_par, F.col(id_col)), text_col, id_col, shingle_len
@@ -1246,26 +1309,17 @@ def minhash_band_keys_md5(
     digests = [
         F.md5(F.concat(F.lit(f"{d}:"), F.col("s"))) for d in range(n_digests)
     ]
-    sigs = sh.groupBy(id_col).agg(
+    return sh.groupBy(id_col).agg(
         *[
             F.min(F.substring(digests[i // 4], (i % 4) * 8 + 1, 8)).alias(f"mh{i}")
             for i in range(num_hashes)
         ]
     )
-    r = num_hashes // bands
-    return sigs.select(
-        F.col(id_col),
-        F.posexplode(
-            F.array(
-                *[
-                    F.md5(
-                        F.concat_ws(",", *[F.col(f"mh{b * r + j}") for j in range(r)])
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bidx", "bk"),
-    )
+
+
+def _md5_band_key(b: int, r: int):
+    """md5 of band b's r comma-joined md5 minwise values."""
+    return F.md5(F.concat_ws(",", *[F.col(f"mh{b * r + j}") for j in range(r)]))
 
 
 def _minhash_md5_band_sql(
@@ -1323,82 +1377,12 @@ def neardup_minhash_checked(
     of :func:`neardup_minhash_native`, on the md5 minwise order — every
     stage reproducible in ANSI SQL, so the whole pipeline (not just the
     verify) sits behind the value-hash correctness gate."""
-    cands = (
-        minhash_band_keys_md5(docs, text_col, id_col, num_hashes, bands, shingle_len)
-        .localCheckpoint(eager=True)
-    )
-    left = cands.select(F.col(id_col).alias("id_a"), "bidx", "bk")
-    right = cands.select(F.col(id_col).alias("id_b"), "bidx", "bk")
-    pairs = (
-        left.join(right, ["bidx", "bk"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    cand_ids = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .union(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    docs_sub = docs.join(cand_ids, id_col, "left_semi")
-    # Verify PER CANDIDATE PAIR (the oracle's own join shape) instead of
-    # re-deriving every pair sharing a shingle among candidate docs and
-    # intersecting with `pairs` at the end: the shingle self-join's fan-out
-    # is Σ_shingle df² (quadratic in each common shingle's doc frequency —
-    # 4.09M rows for 6.6k trajectory docs at sf0.1), while keying by the
-    # banded pairs bounds it at Σ_pairs |shingles(a)| (1.12M rows there,
-    # 3.6× fewer) and can never blow up on a hub shingle the banding
-    # already declined to collide.  Same rows out: a pair survives iff it
-    # is banded-candidate AND exact-Jaccard ≥ threshold.
-    return _ngram_jaccard_for_pairs(
-        docs_sub, pairs, text_col, id_col, shingle_len, jaccard_threshold
-    )
-
-
-def _ngram_jaccard_for_pairs(
-    docs: DataFrame,
-    pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_len: int = 3,
-    threshold: float = 0.2,
-) -> DataFrame:
-    """EXACT n-gram Jaccard for a GIVEN candidate-pair relation (id_a,
-    id_b): attach side a's distinct shingle hashes to each pair, probe
-    side b's on (id_b, sh), count matches per pair — the shuffle carries
-    |pairs| × |shingles(a)| rows of three int64s, never the Σ df²
-    fan-out of the all-pairs-sharing-a-shingle self-join
-    (:func:`ngram_jaccard_pairs`), and never text.  A pair with an empty
-    intersection drops (no row survives the probe), exactly like the
-    self-join shape.  Jaccard and rounding identical to
-    :func:`ngram_jaccard_pairs`."""
-    sh = _distinct_shingle_rel(docs, text_col, id_col, shingle_len).select(
-        id_col, F.xxhash64("s").alias("sh")
-    )
-    # feeds the sizes agg AND both probe sides — materialize once, like
-    # the self-join variant does
-    sh = sh.localCheckpoint(eager=True)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        pairs.join(sh.select(F.col(id_col).alias("id_a"), "sh"), "id_a")
-        .join(sh.select(F.col(id_col).alias("id_b"), "sh"), ["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 9
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    keys = minhash_band_keys_md5(
+        docs, text_col, id_col, num_hashes, bands, shingle_len
+    ).localCheckpoint(eager=True)
+    return _verify_jaccard(
+        _band_pairs(keys, id_col), docs, text_col, id_col, shingle_len,
+        jaccard_threshold,
     )
 
 
@@ -1575,46 +1559,8 @@ def simhash_checked(
     are 2-byte ints, so candidate generation shuffles almost nothing.
     Output: (id_a, id_b, hamming).
     """
-    width = _SIMHASH_BITS // bands
-    fps = simhash_fingerprints_md5(docs, text_col, id_col).localCheckpoint(eager=True)
-    banded = fps.select(
-        F.col(id_col),
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("fp"), k * width).bitwiseAND(
-                        F.lit((1 << width) - 1)
-                    )
-                    for k in range(bands)
-                ]
-            )
-        ).alias("bidx", "bk"),
-    )
-    left = banded.select(F.col(id_col).alias("id_a"), "bidx", "bk")
-    right = banded.select(F.col(id_col).alias("id_b"), "bidx", "bk")
-    cand = (
-        left.join(right, ["bidx", "bk"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    fa = fps.select(F.col(id_col).alias("id_a"), F.col("fp").alias("fp_a"))
-    fb = fps.select(F.col(id_col).alias("id_b"), F.col("fp").alias("fp_b"))
-    # verify BEFORE dedup: the XOR+bit_count check is a codegen'd per-row op
-    # (no exchange — the fingerprint relation broadcasts), while distinct is
-    # a shuffle of the whole multi-band candidate stream.  Filtering first
-    # means the distinct only sees true near-dup pairs (a few rows), not
-    # every band collision; same output, one big exchange removed.
-    return (
-        cand.join(fa, "id_a")
-        .join(fb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.expr("fp_a ^ fp_b")).cast("bigint").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    fps = simhash_fingerprints_md5(docs, text_col, id_col)
+    return _simhash_pairs(fps, id_col, _SIMHASH_BITS, bands, max_hamming)
 
 
 def simhash_checked_sql(bands: int = 4, max_hamming: int = 3) -> str:
@@ -1887,37 +1833,11 @@ def minhash_estimate_audit(
     n_inter·10⁶ div union.  Same md5 minwise order as the checked
     pipeline, so every column is value-hash oracle-checkable.
     """
-    sh = _distinct_shingle_rel(docs, text_col, id_col, shingle_len)
-    n_digests = (num_hashes + 3) // 4
-    digests = [
-        F.md5(F.concat(F.lit(f"{d}:"), F.col("s"))) for d in range(n_digests)
-    ]
-    sigs = sh.groupBy(id_col).agg(
-        *[
-            F.min(F.substring(digests[i // 4], (i % 4) * 8 + 1, 8)).alias(f"mh{i}")
-            for i in range(num_hashes)
-        ]
+    sigs = _md5_minhash_sigs(
+        docs, text_col, id_col, num_hashes, shingle_len
     ).localCheckpoint(eager=True)
-    r = num_hashes // bands
-    banded = sigs.select(
-        F.col(id_col),
-        F.posexplode(
-            F.array(
-                *[
-                    F.md5(
-                        F.concat_ws(",", *[F.col(f"mh{b * r + j}") for j in range(r)])
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bidx", "bk"),
-    )
-    pairs = (
-        banded.select(F.col(id_col).alias("id_a"), "bidx", "bk")
-        .join(banded.select(F.col(id_col).alias("id_b"), "bidx", "bk"), ["bidx", "bk"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+    pairs = _band_pairs(
+        _band_rows(sigs, id_col, num_hashes, bands, _md5_band_key), id_col
     )
     sa = sigs.select(
         F.col(id_col).alias("id_a"), *[F.col(f"mh{i}").alias(f"a{i}") for i in range(num_hashes)]
@@ -1928,31 +1848,18 @@ def minhash_estimate_audit(
     matches = sum(
         (F.col(f"a{i}") == F.col(f"b{i}")).cast("bigint") for i in range(num_hashes)
     )
-    est = pairs.join(sa, "id_a").join(sb, "id_b").select(
-        "id_a", "id_b", matches.alias("n_match")
-    )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        sh.select(F.col(id_col).alias("id_a"), "s")
-        .join(pairs, "id_a")
-        .join(
-            sh.select(F.col(id_col).alias("id_b"), F.col("s")),
-            ["id_b", "s"],
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    out = (
-        est.join(inter, ["id_a", "id_b"], "left")
-        .join(sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("na")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("nb")), "id_b")
+    # every candidate has a shingle set (its signature came from one), so
+    # the overlap keeps every pair; an empty intersection scores 0
+    return (
+        _shingle_overlap(pairs, docs, text_col, id_col, shingle_len)
+        .join(sa, "id_a")
+        .join(sb, "id_b")
+        .select("id_a", "id_b", "_na", "_nb", "_ni", matches.alias("n_match"))
         .select(
             "id_a",
             "id_b",
             F.expr(f"n_match * 1000000 DIV {num_hashes}").alias("est_ppm"),
-            F.expr(
-                "COALESCE(n_inter, 0) * 1000000 DIV (na + nb - COALESCE(n_inter, 0))"
-            ).alias("exact_ppm"),
+            F.expr("_ni * 1000000 DIV (_na + _nb - _ni)").alias("exact_ppm"),
         )
         .withColumn(
             "err_ppm",
@@ -1960,7 +1867,6 @@ def minhash_estimate_audit(
         )
         .orderBy("id_a", "id_b")
     )
-    return out
 
 
 def minhash_estimate_audit_sql(
@@ -2461,6 +2367,10 @@ def minhash_scurve_audit(
     pow); measured recall is exact integer counting over the exact-pair
     relation left-joined with the banded candidate set.
     """
+    keys = minhash_band_keys_md5(
+        docs, text_col, id_col, num_hashes, bands, shingle_len
+    ).localCheckpoint(eager=True)
+    cands = _band_pairs(keys, id_col).withColumn("cand", F.lit(1))
     r = num_hashes // bands
     theory = {
         d: round((1 - (1 - ((d + 0.5) / 10) ** r) ** bands) * 1_000_000)
@@ -2474,17 +2384,6 @@ def minhash_scurve_audit(
         F.expr("CAST(LEAST(9, CAST(FLOOR(jaccard * 10) AS BIGINT)) AS BIGINT)").alias(
             "bucket"
         ),
-    )
-    keys = minhash_band_keys_md5(
-        docs, text_col, id_col, num_hashes, bands, shingle_len
-    ).localCheckpoint(eager=True)
-    cands = (
-        keys.select(F.col(id_col).alias("id_a"), "bidx", "bk")
-        .join(keys.select(F.col(id_col).alias("id_b"), "bidx", "bk"), ["bidx", "bk"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .withColumn("cand", F.lit(1))
     )
     theory_case = "CASE bucket " + " ".join(
         f"WHEN {d} THEN {v}" for d, v in theory.items()

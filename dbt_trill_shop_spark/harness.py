@@ -2586,7 +2586,11 @@ _CHANGED_IN_ROUND = {
         "q_ks_test", "q_mannwhitney", "x_length_bias", "q_txn_identity",
         "q_txn_zorder_box", "q_txn_cluster_prune", "x_unigram_lm_em",
         "x_unigram_fertility", "x_unigram_pruned",
-        "s_stream_attribution_outer",
+        "s_stream_attribution_outer", "x_neardup_minhash",
+        "x_neardup_minhash_checked", "x_trajectory_neardup",
+        "x_minhash_audit", "x_minhash_scurve", "x_band_balance",
+        "x_incremental_neardup", "x_simhash_neardup", "x_simhash_checked",
+        "x_simhash_calibration",
     ), 15),
 }
 

@@ -1,6 +1,7 @@
 """Extension operators (SURVEY.md §2.9): dedup, similarity, text analysis,
 multimodal plumbing."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbt_trill_shop_spark.catalog import load_table
@@ -673,6 +674,63 @@ def test_incremental_neardup_store_roundtrip(spark, sf_dir, tmp_path):
     # store contents = exactly the first pass's surviving band rows
     n_bands = spark.read.parquet(store).count()
     assert n_bands == len(ids1) * 4  # 4 bands per kept doc
+
+
+_BAD_BAND_COUNTS = {
+    # r = num_hashes // bands = 0: every band key would be md5("")
+    "minhash_band_keys_md5": lambda d: dedup.minhash_band_keys_md5(
+        d, num_hashes=4, bands=8
+    ),
+    "minhash_band_keys_md5_zero": lambda d: dedup.minhash_band_keys_md5(d, bands=0),
+    "minhash_banded_candidates": lambda d: dedup.minhash_banded_candidates(
+        dedup.minhash_signatures(d, num_hashes=4), num_hashes=4, bands=8
+    ),
+    "neardup_minhash_native": lambda d: dedup.neardup_minhash_native(
+        d, num_hashes=4, bands=0
+    ),
+    "neardup_minhash_checked": lambda d: dedup.neardup_minhash_checked(d, bands=9),
+    "minhash_estimate_audit": lambda d: dedup.minhash_estimate_audit(
+        d, num_hashes=4, bands=5
+    ),
+    "minhash_scurve_audit": lambda d: dedup.minhash_scurve_audit(d, bands=0),
+    "band_bucket_balance": lambda d: dedup.band_bucket_balance(d, bands=9),
+    # width 64 // 65 = 0 and mask 0: every fingerprint in one bucket
+    "simhash_near_duplicates": lambda d: dedup.simhash_near_duplicates(d, bands=65),
+    "simhash_neardup_verified": lambda d: dedup.simhash_neardup_verified(d, bands=0),
+    "simhash_checked": lambda d: dedup.simhash_checked(d, bands=61),
+    "simhash_distance_histogram": lambda d: dedup.simhash_distance_histogram(
+        d, bands=61
+    ),
+}
+
+
+@pytest.mark.parametrize("entry", sorted(_BAD_BAND_COUNTS))
+def test_band_count_without_rows_per_band_raises(spark, entry):
+    """A band count that leaves a band zero hash values (MinHash) or zero
+    bits (SimHash) keys every band on nothing, so every document would
+    collide with every other; each public banded entry rejects it."""
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "f g h i j")], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match="bands="):
+        _BAD_BAND_COUNTS[entry](docs)
+
+
+def test_band_count_extremes_are_valid(spark):
+    """Both ends of the legal range still band: one band over the whole
+    sketch (for SimHash, the full signed 64-bit fingerprint) and one
+    component per band.  The exact copy pairs at hamming 0, and each doc
+    gets one key per band."""
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c d e f"), (3, "u v w x y z")],
+        "doc_id long, text string",
+    )
+    for bands in (1, 64):
+        got = {tuple(r) for r in dedup.simhash_near_duplicates(docs, bands=bands).collect()}
+        assert (1, 2, 0) in got and all(h > 0 for a, b, h in got if (a, b) != (1, 2))
+    for bands in (1, 8):
+        keys = dedup.minhash_band_keys_md5(docs, bands=bands)
+        assert keys.count() == 3 * bands
 
 
 def _px_simhash_checked_finds_planted_neardup(spark):

@@ -4,6 +4,7 @@ are asserted here so a refactor can't silently lose them."""
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbt_trill_shop_spark.catalog import load_table
@@ -582,16 +583,21 @@ def test_bootstrap_md5_load_is_parallel(spark, sf_dir):
     assert "hashpartitioning(o_orderkey" in plan
 
 
-def test_simhash_verified_scores_pairs_not_common_shingles(spark, sf_dir):
-    """The verify stage must score candidate pairs via set intersection
-    (broadcast per-doc shingle sets), never re-generate pair rows through a
-    common-shingle join (template collisions make that quadratic-ish), and
-    the O(|set|) intersect must sit behind the integer size-ratio prefilter
-    (J <= min/max bounds the reachable Jaccard — cheap to check first)."""
-    from dbt_trill_shop_spark.ext.dedup import simhash_neardup_verified
+@pytest.mark.parametrize(
+    "pipeline",
+    ["simhash_neardup_verified", "neardup_minhash_native", "neardup_minhash_checked"],
+)
+def test_simhash_verified_scores_pairs_not_common_shingles(spark, sf_dir, pipeline):
+    """Every banded near-dup pipeline's verify stage must score candidate
+    pairs via set intersection (broadcast per-doc shingle sets), never
+    re-generate pair rows through a common-shingle join (template
+    collisions make that quadratic-ish), and the O(|set|) intersect must
+    sit behind the integer size-ratio prefilter (J <= min/max bounds the
+    reachable Jaccard — cheap to check first)."""
+    from dbt_trill_shop_spark.ext import dedup
 
     docs = load_table(spark, sf_dir, "documents")
-    plan = _plan(simhash_neardup_verified(docs))
+    plan = _plan(getattr(dedup, pipeline)(docs))
     assert "array_intersect" in plan
     assert plan.count("BroadcastHashJoin") >= 2  # both set bindings broadcast
     i_least = plan.find("least")
